@@ -2,7 +2,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "cpus": ..., "cpu_spin_mops": ...,
+"loadavg": [...], ...}.
 
 Each query is timed over a FULL materialization via the ``noop`` sink —
 ``count()`` is not full materialization: Catalyst's column pruning strips
@@ -16,19 +17,30 @@ Each query runs ``$SPARK_GRAFT_BENCH_RUNS`` times (default 3) and reports
 the MEDIAN — this VM has documented 1.3-3x load drift (BENCH_sf10_local
 note; round 4's official single-shot artifact was 5x off a quiet-host
 re-run of identical code), so single-shot numbers are not adjudicable.
-The host load average is recorded in the JSON for the same reason.
+The host load average and a CPU spin yardstick are recorded for the same
+reason.
+
+History: one sidecar per (sf, cpus), ``BENCH_local_sf{sf}_c{cpus}.json``.
+Every run read-merge-writes it per query, so headline, extended and
+subset runs never erase each other's lines.  A query slower than its
+history by more than ``HISTORY_FACTOR`` after spin normalization is
+re-run (interleaved) and the rerun verdict is recorded.
+
+Other knobs: ``$SPARK_GRAFT_BENCH_QUERIES`` (comma-separated subset) and
+``$SPARK_GRAFT_BENCH_EXTENDED=1`` (add ``EXTENDED``).  Decode and stream
+throughput live in ``perfbench/`` (``python3 perfbench/run.py
+--workload {decode_wide,stream_replicate}``).
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import statistics
 import sys
 import time
 
+from bench_decode import cpu_spin_mops
 from byte_convert_avro_spark.session import get_spark
 from byte_convert_avro_spark.queries import queries
 
@@ -312,160 +324,50 @@ EXTENDED = [
     "streaming_anova_moment_cells",
 ]
 
-
-#: Deliberate scale trades (r14 VERDICT finding #6): a query whose local
-#: median moved because a 100 TB-fatal plan shape was removed on purpose
-#: must adjudicate as "accepted-trade", not "noise"/"regression-suspect" —
-#: otherwise the drift ratchet re-flags the same intentional move every
-#: round.  Entries carry the round + rationale; the compact artifact
-#: includes this map verbatim whenever one of its queries gets flagged.
-ACCEPTED_TRADES = {
-    "jaccard_verified_candidates": (
-        "r14 removed a corpus-sized shingle-table broadcast (fatal at "
-        "scale); r15 re-landed the verify as checkpointed two-join "
-        "SHUFFLE_HASH (sf1 A/B in SCALE.md: 43.5 s melt-SMJ -> ~17-27 s, "
-        "broadcast 16.3 s) — still ~1.5x the pre-trade local median, "
-        "accepted for the 100 TB plan"
-    ),
-}
+#: a query is flagged when its median exceeds this multiple of its
+#: spin-normalized history median
+HISTORY_FACTOR = 1.5
 
 
-def _history_medians() -> tuple[str | None, dict[str, float], dict[str, float]]:
-    """(description, per-query medians, decode history) merged from the
-    local sidecars and the most recent driver bench artifact
-    (``BENCH_r{N}.json`` with the highest N; override with
-    $SPARK_GRAFT_BENCH_HISTORY).  The drift-adjudication baseline: twice
-    now (CC r7, avro_roundtrip r8) a >2x driver-median line was VM load
-    noise proven only by out-of-band artifacts — the bench now carries
-    that evidence itself.
-
-    Merge order (r12 verdict #1: the driver's 27-query wrapper output
-    must not blind the EXTENDED lines): local full sidecar, then the
-    extended sidecar, then the newest driver artifact — so headline
-    names get the newest driver medians while extended-only names keep
-    the last committed extended run.  Decode history takes the newest
-    source that has a decode block (driver artifact preferred)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    cur_sf = float(sf) if sf.replace(".", "").isdigit() else sf
-
-    def load_doc(path: str) -> tuple[dict[str, float], dict[str, float]]:
-        """(queries, decode) from either bench.py's own output or the
-        DRIVER's wrapper format ({n, rc, parsed, tail, sf}: ``parsed``
-        is our JSON line if the driver could parse it, ``tail`` the
-        last 2000 chars of stdout — the round-10 lesson: the r8-r10
-        adjudication blocks were silently empty because the wrapper has
-        no top-level "queries" and the old reader never looked inside,
-        so no history line ever got flagged)."""
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            return {}, {}
-        if doc.get("sf") != cur_sf:  # another SF is not comparable
-            return {}, {}
-        for d in (doc, doc.get("parsed") or {}):
-            if isinstance(d.get("queries"), dict):
-                qs = {k: float(v) for k, v in d["queries"].items()}
-                dec = {
-                    k: float(v)
-                    for k, v in (d.get("decode") or {}).items()
-                    if isinstance(v, (int, float))
-                }
-                return qs, dec
-        tail = doc.get("tail")
-        if isinstance(tail, str):  # best-effort: find blocks in tail
-            qs, dec = {}, {}
-            m = re.search(r'"queries":\s*(\{[^{}]*\})', tail)
-            if m:
-                try:
-                    qs = {k: float(v) for k, v in json.loads(m.group(1)).items()}
-                except ValueError:
-                    qs = {}
-            m = re.search(r'"decode":\s*(\{[^{}]*\})', tail)
-            if m:
-                try:
-                    dec = {
-                        k: float(v)
-                        for k, v in json.loads(m.group(1)).items()
-                        if isinstance(v, (int, float))
-                    }
-                except ValueError:
-                    dec = {}
-            return qs, dec
-        return {}, {}
-
-    path = os.environ.get("SPARK_GRAFT_BENCH_HISTORY")
-    if path:
-        qs, dec = load_doc(path)
-        return os.path.basename(path), qs, dec
-    cands = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.fullmatch(r"BENCH_r0*(\d+)\.json", os.path.basename(p))
-        if m:
-            cands.append((int(m.group(1)), p))
-    driver = sorted(cands, reverse=True)[:1]
-    sources: list[str] = [
-        os.path.join(here, "BENCH_local_full.json"),
-        os.path.join(here, f"BENCH_local_full_sf{sf}.json"),
-        os.path.join(here, "BENCH_local_extended.json"),
-        os.path.join(here, f"BENCH_local_extended_sf{sf}.json"),
-    ] + [p for _, p in driver]
-    merged_q: dict[str, float] = {}
-    decode_hist: dict[str, float] = {}
-    used: list[str] = []
-    for p in sources:
-        qs, dec = load_doc(p)
-        if qs or dec:
-            used.append(os.path.basename(p))
-        merged_q.update(qs)
-        if dec:
-            decode_hist = dec  # later (newer) sources win wholesale
-    return ("+".join(used) or None), merged_q, decode_hist
+def history_path(here: str, sf: str, cpus: int) -> str:
+    """The one history sidecar for this (sf, cpus): timings taken at
+    another scale factor or core count are not comparable."""
+    return os.path.join(here, f"BENCH_local_sf{sf}_c{cpus}.json")
 
 
-def _decode_best_ever() -> dict[str, dict]:
-    """Per-key BEST-EVER decode throughput over the committed DRIVER
-    artifact series (``BENCH_r{N}.json`` — the one harness that runs
-    identically every round; local sidecars vary runner config and
-    would poison the max).  The r13 verdict's ratchet fix: comparing
-    each round only to the NEWEST history let −18% (r12) + −27% (r13)
-    compound to −40% without ever crossing the per-round 1.5x band, so
-    decode lines are now additionally adjudicated against this
-    cumulative baseline.  Adjudication rerun bests inside the decode
-    blocks count — they are committed measurements of the same code."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: dict[str, dict] = {}
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        if not re.fullmatch(r"BENCH_r0*\d+\.json", os.path.basename(p)):
-            continue
-        try:
-            with open(p) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for d in (doc, doc.get("parsed") or {}):
-            dec = d.get("decode")
-            if not isinstance(dec, dict):
-                continue
-            for key in ("single_thread_rec_s", "spark_rec_s"):
-                vals = []
-                if isinstance(dec.get(key), (int, float)):
-                    vals.append(float(dec[key]))
-                rb = (dec.get("adjudication") or {}).get(key, {}).get("rerun_best")
-                if isinstance(rb, (int, float)):
-                    vals.append(float(rb))
-                for v in vals:
-                    if key not in best or v > best[key]["rec_s"]:
-                        best[key] = {"rec_s": v, "source": os.path.basename(p)}
-            break
-    return best
+def load_history(path: str) -> dict:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return {}
+
+
+def save_history(path: str, context: dict, entries: dict[str, dict]) -> None:
+    """Read-merge-write: this run's ``context`` goes on top and
+    ``entries`` replace only the queries that ran; every other query
+    keeps its last entry."""
+    doc = load_history(path)
+    doc = {**doc, **context, "queries": {**doc.get("queries", {}), **entries}}
+    try:
+        with open(path, "w") as f:
+            json.dump(doc, f, indent=1)
+    except OSError:
+        pass  # read-only checkout: stdout still carries the result
+
+
+def is_flagged(t_now: float, t_hist: float, spin_hist: float, spin_now: float) -> bool:
+    """``t_now > HISTORY_FACTOR * t_hist * spin_hist / spin_now``: the
+    history median is rescaled to the current host speed, so a slower
+    host (lower spin) raises the bar and a code regression on a steady
+    host still fires."""
+    return t_now > HISTORY_FACTOR * t_hist * spin_hist / spin_now
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_label = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf_label) if sf_label.replace(".", "").isdigit() else sf_label
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     # Controlled re-bench knob (round-7 verdict: the CC bimodality needed
     # a focused >=5-run artifact): comma-separated subset of HEADLINE.
@@ -481,6 +383,7 @@ def main() -> None:
         headline = picked
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
     reg = queries()
 
     # Warm-up: run every headline query once at the smallest SF so the
@@ -499,7 +402,7 @@ def main() -> None:
         except Exception:  # noqa: BLE001 — warm-up must never fail the bench
             pass
 
-    timings: dict[str, float] = {}
+    spin = round(cpu_spin_mops(), 1)
     runs: dict[str, list[float]] = {}
     run_load: dict[str, list[float]] = {}
     # interleave rounds (run 0 of every query, then run 1, ...) so a
@@ -514,174 +417,77 @@ def main() -> None:
             dt = time.perf_counter() - t0
             runs.setdefault(name, []).append(dt)
             print(f"# run {i}: {name}: {dt:.3f}s", file=sys.stderr)
-    for name in headline:
-        timings[name] = round(statistics.median(runs[name]), 3)
+    timings = {name: round(statistics.median(runs[name]), 3) for name in headline}
 
-    # --- self-adjudication (round-8 verdict #5): any line >1.5x over its
-    # own history gets an immediate interleaved A/B re-run recorded in
-    # the artifact, so a drift verdict never needs out-of-band evidence.
-    hist_file, hist, decode_hist = _history_medians()
-    flagged = [
-        n for n in headline
-        if n in hist and hist[n] > 0 and timings[n] > 1.5 * hist[n]
-    ]
-    adjudication: dict[str, dict] = {}
-    if flagged and not os.environ.get("SPARK_GRAFT_BENCH_NO_ADJUDICATE"):
-        rerun_n = max(3, n_runs)
-        reruns: dict[str, list[float]] = {n: [] for n in flagged}
-        rerun_load: dict[str, list[float]] = {n: [] for n in flagged}
-        for i in range(rerun_n):  # interleaved, same as the main pass
-            for name in flagged:
-                rerun_load[name].append(round(os.getloadavg()[0], 2))
-                t0 = time.perf_counter()
-                materialize(reg[name](spark, sf_dir))
-                reruns[name].append(time.perf_counter() - t0)
-                print(
-                    f"# adjudicate {i}: {name}: {reruns[name][-1]:.3f}s",
-                    file=sys.stderr,
-                )
+    # --- self-adjudication (round-8 verdict #5): any line over its own
+    # spin-normalized history gets an immediate interleaved re-run
+    # recorded in the artifact, so a drift verdict never needs
+    # out-of-band evidence.
+    path = history_path(os.path.dirname(os.path.abspath(__file__)), sf_label, cpus)
+    hist = load_history(path).get("queries") or {}
+
+    def over_history(name: str, t: float) -> bool:
+        h = hist.get(name)
+        return bool(h) and is_flagged(t, h["median_s"], h["cpu_spin_mops"], spin)
+
+    flagged = [n for n in headline if over_history(n, timings[n])]
+    reruns: dict[str, list[float]] = {n: [] for n in flagged}
+    for i in range(max(3, n_runs)):  # interleaved, same as the main pass
         for name in flagged:
-            rmed = statistics.median(reruns[name])
-            adjudication[name] = {
-                "history_median": hist[name],
-                "first_median": timings[name],
-                "rerun_all": [round(x, 3) for x in reruns[name]],
-                "rerun_min": round(min(reruns[name]), 3),
-                "rerun_median": round(rmed, 3),
-                "rerun_loadavg": rerun_load[name],
-                "verdict": (
-                    "accepted-trade" if name in ACCEPTED_TRADES
-                    else "noise" if min(reruns[name]) <= 1.5 * hist[name]
-                    else "regression-suspect"
-                ),
-            }
-            if name in ACCEPTED_TRADES:
-                adjudication[name]["trade"] = ACCEPTED_TRADES[name]
-
-    # decode throughput (the reference's core capability) — median-of-3 so
-    # the fused-codegen path's regression story is tracked round-over-round
-    # in the same artifact (previously only in SCALE.md prose)
-    import bench_decode
-
-    decode = {
-        "cpu_spin_mops": round(bench_decode.cpu_spin_mops(), 1),
-        "single_thread_rec_s": round(bench_decode.bench_single_thread(runs=n_runs)),
-        "spark_rec_s": round(bench_decode.bench_spark(spark=spark, runs=n_runs)),
-        "unit": "records/sec",
-        "runs": n_runs,
+            t0 = time.perf_counter()
+            materialize(reg[name](spark, sf_dir))
+            reruns[name].append(round(time.perf_counter() - t0, 3))
+            print(f"# adjudicate {i}: {name}: {reruns[name][-1]:.3f}s", file=sys.stderr)
+    adjudication = {
+        name: {
+            "history_median": hist[name]["median_s"],
+            "history_spin_mops": hist[name]["cpu_spin_mops"],
+            "rerun_all": reruns[name],
+            "rerun_median": round(statistics.median(reruns[name]), 3),
+            "rerun_min": min(reruns[name]),
+            "verdict": (
+                "regression-suspect" if over_history(name, min(reruns[name]))
+                else "noise"
+            ),
+        }
+        for name in flagged
     }
 
-    # decode self-adjudication (r12 verdict #5): the query rerun logic
-    # never covered the decode block, so r12's -18% single-thread drift
-    # went unadjudicated.  A decode line >1.5x SLOWER than history
-    # (rec/s < history/1.5) gets the same idle rerun + recorded verdict.
-    decode_adj: dict[str, dict] = {}
-    decode_best = _decode_best_ever()
-    if not os.environ.get("SPARK_GRAFT_BENCH_NO_ADJUDICATE"):
-        for key, runner in (
-            ("single_thread_rec_s", lambda: bench_decode.bench_single_thread(runs=1)),
-            ("spark_rec_s", lambda: bench_decode.bench_spark(spark=spark, runs=1)),
-        ):
-            h = decode_hist.get(key)
-            b = decode_best.get(key, {}).get("rec_s")
-            # Fire on EITHER the per-round band (vs newest history) or
-            # the cumulative band (vs best-ever) — the latter is the
-            # anti-ratchet: slow drift can never stay under both.
-            vs_latest = bool(h and decode[key] * 1.5 < h)
-            vs_best = bool(b and decode[key] * 1.5 < b)
-            if not (vs_latest or vs_best):
-                continue
-            reruns = [round(runner()) for _ in range(max(3, n_runs))]
-            ref = max(v for v in (h, b) if v)
-            decode_adj[key] = {
-                "history_rec_s": h,
-                "best_ever_rec_s": b,
-                "best_ever_source": decode_best.get(key, {}).get("source"),
-                "first_rec_s": decode[key],
-                "rerun_all": reruns,
-                "rerun_best": max(reruns),
-                "rerun_loadavg": round(os.getloadavg()[0], 2),
-                "verdict": (
-                    "noise" if max(reruns) * 1.5 >= ref
-                    else (
-                        "cumulative-drift-suspect"
-                        if h and max(reruns) * 1.5 >= h
-                        else "regression-suspect"
-                    )
-                ),
-            }
-            print(f"# adjudicate decode {key}: {decode_adj[key]}", file=sys.stderr)
-    if decode_best:  # the cumulative baseline, visible every round
-        decode["best_ever"] = {
-            k: v["rec_s"] for k, v in decode_best.items()
-        }
-    if decode_adj:
-        decode["adjudication"] = decode_adj
-
-    total = round(sum(timings.values()), 3)
-    # The compact line the driver records (its artifact keeps only the
-    # parsed JSON or the LAST 2000 stdout chars — so the adjudicable
-    # fields stay small and late in the object) …
-    compact = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "runs_per_query": n_runs,
-        "aggregation": "median",
+    context = {
+        "sf": sf,
+        "cpus": cpus,
+        "cpu_spin_mops": spin,
         "loadavg": [round(x, 2) for x in os.getloadavg()],
-        "history_file": hist_file,
-        "materialize": "noop-write (full column evaluation)",
-        "decode": decode,
-        # compact verdicts only — full rerun samples live in the sidecar
-        "adjudication": {
-            n: {
-                k: a[k]
-                for k in (
-                    "history_median", "rerun_median", "rerun_min",
-                    "verdict", "trade",
-                )
-                if k in a
-            }
-            for n, a in adjudication.items()
-        },
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # … and the full per-run diagnostics to the committed sidecar (also
-    # the history fallback when driver artifacts are unreadable).
-    full = dict(compact)
-    full.update(
-        {
-            "adjudication": adjudication,
-            "mins": {k: round(min(v), 3) for k, v in runs.items()},
-            "all_runs": {
-                k: [round(x, 3) for x in v] for k, v in runs.items()
-            },
-            "run_loadavg": run_load,
+    entries = {
+        name: {
+            "median_s": timings[name],
+            "runs_s": [round(x, 3) for x in runs[name]],
+            "run_loadavg": run_load[name],
+            "cpu_spin_mops": spin,
+            "runs_per_query": n_runs,
         }
-    )
-    here = os.path.dirname(os.path.abspath(__file__))
-    if not subset:  # a subset run must not clobber the full history
-        # EXTENDED runs write their own sidecar: the r12 driver run
-        # clobbered the 45-query extended history in BENCH_local_full
-        # with the 27-query wrapper output (r12 verdict finding #2) —
-        # the driver only ever runs plain, so the extended name is safe.
-        # Non-default SFs get their own suffix for the same reason: an
-        # sf1 scaling run must not overwrite the sf0.1 history either
-        # (it did, once, in round 13 — restored from git).
-        sidecar = (
-            "BENCH_local_extended.json"
-            if os.environ.get("SPARK_GRAFT_BENCH_EXTENDED")
-            else "BENCH_local_full.json"
+        for name in headline
+    }
+    for name, verdict in adjudication.items():
+        entries[name]["adjudication"] = verdict
+    save_history(path, context, entries)
+    print(
+        json.dumps(
+            {
+                "metric": "headline_queries_total",
+                "value": round(sum(timings.values()), 3),
+                "unit": "sec",
+                "runs_per_query": n_runs,
+                "aggregation": "median",
+                "materialize": "noop-write (full column evaluation)",
+                **context,
+                "history_file": os.path.basename(path) if hist else None,
+                "adjudication": adjudication,
+                "queries": timings,
+            }
         )
-        if sf_dir.rstrip("/") != "/root/testdata/sf0.1":
-            sidecar = sidecar.replace(".json", f"_sf{sf}.json")
-        try:
-            with open(os.path.join(here, sidecar), "w") as f:
-                json.dump(full, f, indent=1)
-        except OSError:
-            pass  # read-only checkout: stdout still carries the result
-    print(json.dumps(compact))
+    )
     spark.stop()
 
 

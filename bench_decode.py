@@ -1,46 +1,13 @@
 #!/usr/bin/env python
-"""Decode-throughput benchmark (the reference's core capability).
+"""Host-CPU yardstick shared by ``bench.py`` and ``perfbench/run.py``.
 
-Measures the Confluent-wire-format -> JSON-envelope decode in two forms
-and prints ONE JSON line:
-
-- ``single_thread_rec_s``: the raw per-worker decode loop (no Spark) —
-  comparable to a single Connect-task SMT thread;
-- ``spark_rec_s``: end-to-end through the Spark pipeline on
-  local[$SPARK_GRAFT_CPUS] (cached input, steady state).
-
-Usage: ``python bench_decode.py`` (defaults: 200k/600k records).
+Decode throughput is measured by ``perfbench`` (``python3 perfbench/run.py
+--workload decode_wide``), which times a full materialization of the
+decode UDF; this module keeps only the engine-independent spin loop that
+both benchmarks record next to their numbers.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import time
-
-from byte_convert_avro_spark.avro import schemaless_encode
-from byte_convert_avro_spark.decoder import _decode_one
-from byte_convert_avro_spark.schema_store import CachedParser, LocalSchemaStore
-from byte_convert_avro_spark.wire import encode_wire
-
-SCHEMA = (
-    '{"type":"record","name":"C","fields":['
-    '{"name":"id","type":"long"},{"name":"name","type":"string"},'
-    '{"name":"email","type":["null","string"]},{"name":"balance","type":"double"}]}'
-)
-
-
-def payloads(n: int = 5000) -> list[bytes]:
-    return [
-        encode_wire(
-            1,
-            schemaless_encode(
-                {"id": i, "name": f"user_{i}", "email": f"u{i}@x.com", "balance": i * 1.5},
-                SCHEMA,
-            ),
-        )
-        for i in range(n)
-    ]
 
 
 def cpu_spin_mops(loops: int = 10_000_000) -> float:
@@ -58,79 +25,3 @@ def cpu_spin_mops(loops: int = 10_000_000) -> float:
     for i in range(loops):
         x += i & 7
     return loops / (_t.perf_counter() - t0) / 1e6
-
-
-def bench_single_thread(n: int = 200_000, runs: int = 1) -> float:
-    """Median decode rate over ``runs`` timed passes of ``n`` records."""
-    import statistics
-
-    store = LocalSchemaStore()
-    store.register(SCHEMA, 1)
-    parser = CachedParser(store)
-    pls = payloads()
-    for p in pls[:200]:
-        _decode_one(p, parser, False)
-    rates = []
-    for _ in range(max(1, runs)):
-        t0 = time.perf_counter()
-        for i in range(n):
-            _decode_one(pls[i % 5000], parser, False)
-        rates.append(n / (time.perf_counter() - t0))
-    return statistics.median(rates)
-
-
-def bench_spark(n: int = 600_000, spark=None, runs: int = 1) -> float:
-    """Median end-to-end Spark decode rate.  Pass an existing session to
-    reuse it (it is then NOT stopped — bench.py shares its session)."""
-    import statistics
-
-    from byte_convert_avro_spark.engine import KAFKA_RECORD_SCHEMA, Engine, EngineConfig
-
-    own_session = spark is None
-    if own_session:
-        from byte_convert_avro_spark.session import get_spark
-
-        spark = get_spark("bench_decode")
-        spark.sparkContext.setLogLevel("ERROR")
-    store = LocalSchemaStore()
-    store.register(SCHEMA, 1)
-    eng = Engine(EngineConfig(avro_topics="t:true"), store=store)
-    base = payloads(10_000)
-    rows = [(None, base[i % 10_000], "t", 0, i, None, 0) for i in range(n)]
-    df = (
-        spark.createDataFrame(rows, KAFKA_RECORD_SCHEMA)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .cache()
-    )
-    df.count()
-    out = eng.transform(df)
-    out.count()  # warm
-    rates = []
-    for _ in range(max(1, runs)):
-        t0 = time.perf_counter()
-        cnt = out.count()
-        rates.append(cnt / (time.perf_counter() - t0))
-    df.unpersist()
-    if own_session:
-        spark.stop()
-    return statistics.median(rates)
-
-
-def main() -> None:
-    st = bench_single_thread(runs=3)
-    sp = bench_spark(runs=3)
-    print(
-        json.dumps(
-            {
-                "metric": "decode_throughput",
-                "single_thread_rec_s": round(st),
-                "spark_rec_s": round(sp),
-                "unit": "records/sec",
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0") or os.cpu_count() or 0),
-            }
-        )
-    )
-
-
-if __name__ == "__main__":
-    main()

@@ -414,6 +414,11 @@ def jaccard_similarity(
     candidate set, not the corpus.  -> (doc_a, doc_b, n_common, n_a, n_b,
     jaccard)
 
+    Precondition: ``pairs`` must be a DISTINCT pair set (all callers pass
+    aggregated ``lsh_candidates`` output).  The two endpoint joins keep
+    input multiplicity, so a duplicated input pair yields duplicated
+    output rows; dedup upstream if the candidate source can repeat.
+
     Scale: each document's distinct shingles are aggregated ONCE into an
     array (one shuffle on the doc id, map-side partial ``collect_set``;
     element order is irrelevant to ``array_intersect``/``size``, so no

@@ -20,9 +20,6 @@ from byte_convert_avro_spark.functions import (
 )
 from byte_convert_avro_spark.plans.stats_reset import reset_plan_stats
 
-#: neighborhood_kmv edge-frame persist (r15 A/B toggle; True committed)
-_KMV_PERSIST_EDGES = True
-
 
 def pagerank_fixed_rounds(
     edges: DataFrame,
@@ -446,9 +443,9 @@ def neighborhood_kmv(
     # per query, the last multi-eval-per-round pattern left after r14).
     # The lazily checkpointed frame is |E| rows of two keys — the CC
     # edge-persist discipline (§5): materialize once, replay r+1 times.
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    if _KMV_PERSIST_EDGES:  # A/B toggle, resolved r15 — see below
-        e = e.localCheckpoint(eager=False)
+    e = edges.select(
+        F.col(src).alias("__s"), F.col(dst).alias("__d")
+    ).localCheckpoint(eager=False)
     hv = F.conv(
         F.substring(F.md5(F.col("__n").cast("string")), 1, 8), 16, 10
     ).cast("long")
