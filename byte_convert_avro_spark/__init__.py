@@ -26,7 +26,13 @@ specification, the Apache Spark / PySpark API, and the reference repo's
 observable behavior.  No code is copied from the reference (GPL-3).
 """
 
+from pyspark import TaskContext
+
+from byte_convert_avro_spark import worker_env
 from byte_convert_avro_spark.engine import Engine, EngineConfig
+
+if TaskContext.get() is not None:  # in a Python worker; the driver keeps the stdlib
+    worker_env.install()
 
 __all__ = ["Engine", "EngineConfig"]
 __version__ = "0.1.0"

@@ -20,9 +20,10 @@ struct — because Catalyst extracts Python UDFs out of CASE WHEN and
 evaluates them unconditionally, per-row early-outs (disabled topics,
 tombstones, invalid payloads) live *inside* the UDF where they cost a
 Python ``if`` instead of a decode.  Schema resolution is memoized per
-executor process via ``CachedParser`` (reference: synchronized LRU across
-Connect task threads, AvroTransform.java:108; Python workers are processes,
-so a per-process memo is the equivalent).
+task via ``CachedParser``: the iterator UDF builds a fresh one for each
+task, so a reused worker resolves each schema id again in its next task
+(reference: one synchronized LRU across Connect task threads,
+AvroTransform.java:108).
 
 On a cluster with ``spark-avro`` available, single-schema topics should use
 native ``from_avro`` on ``wire.body(col)`` instead — that keeps the whole
@@ -140,7 +141,7 @@ def make_decode_udf(
 
     @F.pandas_udf(_DECODE_STRUCT)
     def decode(it: Iterator[tuple[pd.Series, pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        parser = CachedParser(store)  # one memo per executor process/worker
+        parser = CachedParser(store)  # one memo per task
         for topic_s, key_s, value_s in it:
             keys_out: list[bytes | None] = []
             values_out: list[bytes | None] = []

@@ -232,7 +232,7 @@ class HttpSchemaRegistry:
 
 
 class CachedParser:
-    """Per-process memo of parsed schemas + compiled readers keyed by id.
+    """Per-task memo of parsed schemas + compiled readers keyed by id.
 
     This is the hot-path structure inside the decode UDF: one dict lookup per
     record once a schema id has been seen (the reference pays the same — a

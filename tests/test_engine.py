@@ -5,11 +5,14 @@
 from __future__ import annotations
 
 import json
+import sys
+import zipimport
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from byte_convert_avro_spark import worker_env
 from byte_convert_avro_spark.avro import schemaless_encode
 from byte_convert_avro_spark.decoder import FAILFAST
 from byte_convert_avro_spark.engine import Engine, EngineConfig, parse_topics
@@ -173,3 +176,20 @@ def test_truncated_avro_body_permissive(spark, store):
     assert out[0]._error is not None and "value:" in out[0]._error
     assert bytes(out[0].value) == truncated  # original bytes pass through
     assert out[1]._error is None  # the good record in the same batch decodes
+
+
+def test_worker_env_installed_in_workers_only(spark):
+    """A package UDF's unpickle imports the package, which patches the
+    worker's zipimport; the driver keeps the stdlib method."""
+
+    @F.udf("string")
+    def invalidate_caches_owner(_):
+        # worker_env is pickled by reference, so the worker imports the package
+        return worker_env.zipimport.zipimporter.invalidate_caches.__module__
+
+    df = spark.range(4, numPartitions=2).select(invalidate_caches_owner("id").alias("m"))
+    df.collect()
+    owners = {r.m for r in df.collect()}  # second job: reused workers
+    expected = "zipimport" if sys.version_info >= (3, 13) else worker_env.__name__
+    assert owners == {expected}
+    assert zipimport.zipimporter.invalidate_caches is worker_env._stdlib_invalidate_caches
