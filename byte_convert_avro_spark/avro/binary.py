@@ -63,6 +63,18 @@ def _need(buf: memoryview, pos: int, ln: int) -> None:
         )
 
 
+def bad_union(i: int) -> None:
+    """An out-of-range union branch index, negative included: raise (like
+    Java's ``List.get``) instead of wrapping to a branch from the end."""
+    raise ValueError(f"union branch index {i} out of range")
+
+
+def bad_enum(i: int) -> None:
+    """An out-of-range enum symbol index, negative included (see
+    :func:`bad_union`)."""
+    raise ValueError(f"enum symbol index {i} out of range")
+
+
 def _read_long(buf: memoryview, pos: int) -> tuple[int, int]:
     """Zigzag varint (spec: int and long use variable-length zig-zag)."""
     b = buf[pos]
@@ -91,10 +103,13 @@ def _compile(s: AvroSchema, memo: dict[int, Reader]) -> Reader:
     if k == "primitive":
         return _PRIMITIVE_READERS[s.name]
     if k == "enum":
-        symbols = s.symbols
+        symbols = s.symbols or []
+        n_symbols = len(symbols)
 
         def read_enum(buf: memoryview, pos: int) -> tuple[str, int]:
             i, pos = _read_long(buf, pos)
+            if not 0 <= i < n_symbols:
+                bad_enum(i)
             return symbols[i], pos
 
         return read_enum
@@ -159,10 +174,13 @@ def _compile(s: AvroSchema, memo: dict[int, Reader]) -> Reader:
 
         return read_map
     if k == "union":
-        branches = [( b.union_label, _compile(b, memo), b) for b in s.fields or []]
+        branches = [(b.union_label, _compile(b, memo), b) for b in s.fields or []]
+        n_branches = len(branches)
 
         def read_union(buf: memoryview, pos: int) -> tuple[Any, int]:
             i, pos = _read_long(buf, pos)
+            if not 0 <= i < n_branches:
+                bad_union(i)
             label, rd, bs = branches[i]
             v, pos = rd(buf, pos)
             if label == "null":

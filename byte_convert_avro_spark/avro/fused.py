@@ -2,12 +2,30 @@
 
 For record schemas built from primitives/enums/fixed/nested records/
 arrays/maps/unions (any branch count, nested anywhere) this module
-generates ONE
-Python function per schema — varint/zigzag decoding inlined (no per-field
-call), JSON text emitted directly (no intermediate dict, no _UnionValue
-allocations, field names and union labels escaped at compile time).
-Truncated payloads raise (bounds check before every length-prefixed
+generates ONE Python function per schema — varint/zigzag decoding inlined
+(no per-field call), JSON text emitted directly (no intermediate dict, no
+_UnionValue allocations, field names and union labels escaped at compile
+time).  Truncated payloads raise (bounds check before every length-prefixed
 slice) — EOF parity with the general reader and the JVM BinaryDecoder.
+Out-of-range union and enum indexes raise, negative ones included, with
+the general reader's messages.
+
+The generated function takes ``(buf, pos)`` where ``buf`` is ``bytes`` or
+any buffer (a memoryview is copied to ``bytes`` once at entry), and keeps
+each record to few interpreter operations:
+
+- a varint whose first byte is < 0x80 (union and enum indexes, lengths,
+  block counts, small ints) decodes by one table lookup; an int field's
+  JSON text comes straight from a table of the 128 one-byte values; longer
+  varints run the general loop;
+- strings, bytes and fixed decode with ``bytes.decode`` on a slice;
+- a finite float renders inline as ``repr(v)``; only NaN and ±Inf call
+  ``_wf``;
+- constant appends that run in sequence (a field's closing brace, the next
+  field's name, a nested record's opening) are merged at compile time into
+  one append; a merge never crosses a branch or loop boundary;
+- helpers and tables are bound as default arguments, so every lookup in
+  the body is a local one.
 
 RECURSIVE record types (self-referential directly or through any
 union/array/map/record path) fuse too: unbounded inlining is impossible,
@@ -33,11 +51,15 @@ import math
 import struct
 from json.encoder import encode_basestring as _esc
 
-from byte_convert_avro_spark.avro.binary import TruncatedPayloadError
+from byte_convert_avro_spark.avro.binary import TruncatedPayloadError, bad_enum, bad_union
 from byte_convert_avro_spark.avro.schema import AvroSchema
 
 _unpack_float = struct.Struct("<f").unpack_from
 _unpack_double = struct.Struct("<d").unpack_from
+
+#: zigzag value of every one-byte varint, and its decimal JSON text
+_ZZ = tuple((b >> 1) ^ -(b & 1) for b in range(128))
+_ZZ_TEXT = tuple(str(v) for v in _ZZ)
 
 
 def _trunc(pos: int, ln: int, blen: int) -> None:
@@ -46,23 +68,6 @@ def _trunc(pos: int, ln: int, blen: int) -> None:
     raise TruncatedPayloadError(
         f"payload truncated: need {ln} bytes at position {pos}, have {blen - pos}"
     )
-
-
-def _bad_union(i: int) -> None:
-    """Out-of-range union branch index: raise (like the general reader's
-    branches[i] IndexError) instead of silently desyncing the decode."""
-    raise ValueError(f"union branch index {i} out of range")
-
-#: inline zigzag-varint decode; leaves `v{n}` holding the long and advances pos
-_VARINT = """
-    n = 0; shift = 0
-    while True:
-        b = buf[pos]; pos += 1
-        n |= (b & 0x7F) << shift
-        if not (b & 0x80): break
-        shift += 7
-    {out} = (n >> 1) ^ -(n & 1)
-"""
 
 
 def _wf(v: float) -> str:
@@ -76,42 +81,80 @@ def _wf(v: float) -> str:
     return repr(v)
 
 
-def _primitive_snippet(name: str, out_var: str) -> str | None:
-    """Code that decodes primitive `name` and appends its JSON text to `o`."""
-    if name in ("int", "long"):
-        return _VARINT.format(out="v") + f"    {out_var} += str(v)\n"
-    if name == "boolean":
-        return (
-            "    b0 = buf[pos]; pos += 1\n"
-            f"    {out_var} += 'true' if b0 == 1 else 'false'\n"
-        )
-    if name == "float":
-        return (
-            "    v = _unpack_float(buf, pos)[0]; pos += 4\n"
-            f"    {out_var} += _wf(v)\n"
-        )
-    if name == "double":
-        return (
-            "    v = _unpack_double(buf, pos)[0]; pos += 8\n"
-            f"    {out_var} += _wf(v)\n"
-        )
-    if name == "string":
-        return (
-            _VARINT.format(out="ln")
-            + "    if ln < 0 or pos + ln > blen: _trunc(pos, ln, blen)\n"
-            + "    v = str(buf[pos:pos+ln], 'utf-8'); pos += ln\n"
-            + f"    {out_var} += _esc(v)\n"
-        )
-    if name == "bytes":
-        return (
-            _VARINT.format(out="ln")
-            + "    if ln < 0 or pos + ln > blen: _trunc(pos, ln, blen)\n"
-            + "    v = str(buf[pos:pos+ln], 'latin-1'); pos += ln\n"
-            + f"    {out_var} += _esc(v)\n"
-        )
-    if name == "null":
-        return f"    {out_var} += 'null'\n"
-    return None
+#: names every generated function binds as default arguments
+_HELPERS = {
+    "_bytes": bytes,
+    "_str": str,
+    "_repr": repr,
+    "_esc": _esc,
+    "_wf": _wf,
+    "_zz": _ZZ,
+    "_zzt": _ZZ_TEXT,
+    "_unpack_float": _unpack_float,
+    "_unpack_double": _unpack_double,
+    "_trunc": _trunc,
+    "_bad_union": bad_union,
+    "_bad_enum": bad_enum,
+}
+
+
+class _Unfusable(Exception):
+    """The schema holds a type the codegen does not cover."""
+
+
+class _Code:
+    """Lines of one generated function body.  ``text`` appends a constant
+    to the output string ``o``; a constant that directly follows another at
+    the same indent (so in the same block, in sequence) joins it."""
+
+    def __init__(self) -> None:
+        # [indent, source line, constant text or None]
+        self.lines: list[list] = [[1, "", ""]]  # `o = ''`, itself a constant
+
+    def add(self, ind: int, line: str) -> None:
+        self.lines.append([ind, line, None])
+
+    def text(self, ind: int, s: str) -> None:
+        last = self.lines[-1]
+        if last[2] is not None and last[0] == ind:
+            last[2] += s
+        else:
+            self.lines.append([ind, "", s])
+
+    def render(self) -> str:
+        out = []
+        for i, (ind, line, const) in enumerate(self.lines):
+            if const is not None:
+                line = f"o {'=' if i == 0 else '+='} {const!r}"
+            out.append("    " * ind + line + "\n")
+        return "".join(out)
+
+
+def _varint(c: _Code, ind: int, out: str) -> None:
+    """Zigzag varint at ``pos`` into local ``out``; advances pos."""
+    c.add(ind, "b = buf[pos]; pos += 1")
+    c.add(ind, f"if b < 128: {out} = _zz[b]")
+    c.add(ind, "else:")
+    _varint_tail(c, ind + 1)
+    c.add(ind + 1, f"{out} = (n >> 1) ^ -(n & 1)")
+
+
+def _varint_tail(c: _Code, ind: int) -> None:
+    """Rest of a varint whose first byte ``b`` has its high bit set: the
+    raw unsigned value lands in ``n``."""
+    c.add(ind, "n = b & 127; shift = 7")
+    c.add(ind, "while True:")
+    c.add(ind + 1, "b = buf[pos]; pos += 1")
+    c.add(ind + 1, "n |= (b & 127) << shift")
+    c.add(ind + 1, "if b < 128: break")
+    c.add(ind + 1, "shift += 7")
+
+
+def _slice_text(c: _Code, ind: int, ln: str, codec: str) -> None:
+    """Append the escaped text of ``ln`` bytes at pos (bounds-checked)."""
+    c.add(ind, f"e = pos + {ln}")
+    c.add(ind, f"if {ln} < 0 or e > blen: _trunc(pos, {ln}, blen)")
+    c.add(ind, f"o += _esc(buf[pos:e].decode({codec})); pos = e")
 
 
 def _recursive_records(root: AvroSchema) -> set[int]:
@@ -151,8 +194,8 @@ def _recursive_records(root: AvroSchema) -> set[int]:
 
 
 def compile_fused(schema: AvroSchema):
-    """-> fn(buf: bytes|memoryview, pos: int) -> str (Avro-JSON text), or
-    None when the schema is outside the fusable subset (non-record top
+    """-> fn(buf: bytes|memoryview, pos: int) -> (Avro-JSON text, end pos),
+    or None when the schema is outside the fusable subset (non-record top
     level, empty unions)."""
     if schema.kind != "record":
         return None
@@ -162,127 +205,132 @@ def compile_fused(schema: AvroSchema):
     rec_fn_names: dict[int, str] = {}
     rec_fn_srcs: list[str] = []
 
-    def rec_fn(rec: AvroSchema) -> str | None:
-        """Memoized per-type decode function for a record on a cycle;
-        registered before body generation so self-references emit calls."""
-        if id(rec) in rec_fn_names:
-            return rec_fn_names[id(rec)]
-        name = f"_recf{next(counter)}"
-        rec_fn_names[id(rec)] = name
-        body = record_snippet(rec)
-        if body is None:
-            return None
-        rec_fn_srcs.append(
-            f"def {name}(buf, pos):\n    blen = len(buf)\n    o = ''\n"
-            + body
+    def function(name: str, rec: AvroSchema) -> str:
+        c = _Code()
+        record(c, 1, rec)
+        bound = ", ".join(f"{h}={h}" for h in [*_HELPERS, *consts])
+        return (
+            f"def {name}(buf, pos, {bound}):\n"
+            "    if type(buf) is not _bytes: buf = _bytes(buf)\n"
+            "    blen = len(buf)\n"
+            + c.render()
             + "    return o, pos\n"
         )
-        return name
 
-    def field_snippet(ft: AvroSchema) -> str | None:
+    def rec_fn(rec: AvroSchema) -> str:
+        """Memoized per-type decode function for a record on a cycle;
+        registered before body generation so self-references emit calls."""
+        if id(rec) not in rec_fn_names:
+            name = f"_recf{next(counter)}"
+            rec_fn_names[id(rec)] = name
+            rec_fn_srcs.append(function(name, rec))
+        return rec_fn_names[id(rec)]
+
+    def value(c: _Code, ind: int, ft: AvroSchema) -> None:
         """Decode one value of type ft and append its JSON text to o."""
-        if ft.kind == "primitive":
-            return _primitive_snippet(ft.name, "o")
-        if ft.kind == "enum":
+        k = ft.kind
+        if k == "primitive":
+            primitive(c, ind, ft.name)
+        elif k == "enum":
             # symbols escaped at compile time -> pure table lookup
-            k = next(counter)
-            consts[f"_sym{k}"] = tuple(_esc(sym) for sym in (ft.symbols or []))
-            return _VARINT.format(out="si") + f"    o += _sym{k}[si]\n"
-        if ft.kind == "fixed":
-            return (
-                f"    if pos + {ft.size} > blen: _trunc(pos, {ft.size}, blen)\n"
-                f"    v = str(buf[pos:pos+{ft.size}], 'latin-1'); pos += {ft.size}\n"
-                "    o += _esc(v)\n"
-            )
-        if ft.kind == "record":
+            n = next(counter)
+            syms = tuple(_esc(sym) for sym in (ft.symbols or []))
+            consts[f"_sym{n}"] = syms
+            _varint(c, ind, "si")
+            c.add(ind, f"if 0 <= si < {len(syms)}: o += _sym{n}[si]")
+            c.add(ind, "else: _bad_enum(si)")
+        elif k == "fixed":
+            _slice_text(c, ind, str(ft.size), "'latin-1'")
+        elif k == "record":
             if id(ft) in cyclic:
-                name = rec_fn(ft)
-                if name is None:
-                    return None
-                return f"    _rs, pos = {name}(buf, pos)\n    o += _rs\n"
-            return record_snippet(ft)
-        if ft.kind == "union":
-            # arbitrary branch count, any fusable branch type (so unions
-            # nested inside arrays/maps fuse too); out-of-range index
-            # raises instead of desyncing (general-reader parity)
-            branches = ft.fields or []
-            if not branches:
-                return None
-            k = next(counter)
-            out = [_VARINT.format(out=f"bi{k}")]
-            for j, b in enumerate(branches):
-                kw = "if" if j == 0 else "elif"
-                out.append(f"    {kw} bi{k} == {j}:\n")
-                if b.union_label == "null":
-                    out.append("        o += 'null'\n")
-                    continue
-                snip = field_snippet(b)
-                if snip is None:
-                    return None
-                wrap_open = "{" + json.dumps(b.union_label) + ":"
-                out.append(f"        o += {wrap_open!r}\n")
-                out.append("".join("    " + line + "\n" for line in snip.splitlines()))
-                out.append("        o += '}'\n")
-            out.append(f"    else:\n        _bad_union(bi{k})\n")
-            return "".join(out)
-        if ft.kind in ("array", "map"):
-            inner = field_snippet(ft.items if ft.kind == "array" else ft.values)
-            if inner is None:
-                return None
-            k = next(counter)
-            open_ch, close_ch = ("[", "]") if ft.kind == "array" else ("{", "}")
-            lines = [f"    o += {open_ch!r}\n", f"    fa{k} = True\n", "    while True:\n"]
-            block = [_VARINT.format(out=f"cnt{k}")]
-            block.append(f"    if cnt{k} == 0: break\n")
-            block.append(f"    if cnt{k} < 0:\n")
-            block.append(f"        cnt{k} = -cnt{k}\n")
-            block.append("".join("    " + ln + "\n" for ln in _VARINT.format(out="_bsz").splitlines()))
-            block.append(f"    for _ in range(cnt{k}):\n")
-            item = [f"    if fa{k}: fa{k} = False\n", "    else: o += ','\n"]
-            if ft.kind == "map":
-                item.append(_VARINT.format(out="kln"))
-                item.append("    if kln < 0 or pos + kln > blen: _trunc(pos, kln, blen)\n")
-                item.append("    o += _esc(str(buf[pos:pos+kln], 'utf-8')) + ':'; pos += kln\n")
-            item.append(inner)
-            block.append("".join("    " + ln + "\n" for ln in "".join(item).splitlines()))
-            lines.append("".join("    " + ln + "\n" for ln in "".join(block).splitlines()))
-            lines.append(f"    o += {close_ch!r}\n")
-            return "".join(lines)
-        return None
+                c.add(ind, f"_rs, pos = {rec_fn(ft)}(buf, pos)")
+                c.add(ind, "o += _rs")
+            else:
+                record(c, ind, ft)
+        elif k == "union":
+            union(c, ind, ft)
+        elif k in ("array", "map"):
+            collection(c, ind, ft)
+        else:
+            raise _Unfusable(k)
 
-    def record_snippet(rec: AvroSchema) -> str | None:
+    def primitive(c: _Code, ind: int, name: str) -> None:
+        if name in ("int", "long"):
+            c.add(ind, "b = buf[pos]; pos += 1")
+            c.add(ind, "if b < 128: o += _zzt[b]")
+            c.add(ind, "else:")
+            _varint_tail(c, ind + 1)
+            c.add(ind + 1, "o += _str((n >> 1) ^ -(n & 1))")
+        elif name == "boolean":
+            c.add(ind, "o += 'true' if buf[pos] == 1 else 'false'; pos += 1")
+        elif name in ("float", "double"):
+            size = 4 if name == "float" else 8
+            c.add(ind, f"v = _unpack_{name}(buf, pos)[0]; pos += {size}")
+            c.add(ind, "o += _repr(v) if v - v == 0.0 else _wf(v)")
+        elif name in ("string", "bytes"):
+            _varint(c, ind, "ln")
+            _slice_text(c, ind, "ln", "" if name == "string" else "'latin-1'")
+        elif name == "null":
+            c.text(ind, "null")
+        else:
+            raise _Unfusable(name)
+
+    def union(c: _Code, ind: int, ft: AvroSchema) -> None:
+        # arbitrary branch count, any fusable branch type (so unions
+        # nested inside arrays/maps fuse too); an out-of-range index
+        # raises instead of desyncing (general-reader parity)
+        branches = ft.fields or []
+        if not branches:
+            raise _Unfusable("empty union")
+        bi = f"bi{next(counter)}"
+        _varint(c, ind, bi)
+        for j, b in enumerate(branches):
+            c.add(ind, f"{'if' if j == 0 else 'elif'} {bi} == {j}:")
+            if b.union_label == "null":
+                c.text(ind + 1, "null")
+                continue
+            c.text(ind + 1, "{" + json.dumps(b.union_label) + ":")
+            value(c, ind + 1, b)
+            c.text(ind + 1, "}")
+        c.add(ind, f"else: _bad_union({bi})")
+
+    def collection(c: _Code, ind: int, ft: AvroSchema) -> None:
+        is_map = ft.kind == "map"
+        n = next(counter)
+        cnt, first = f"cnt{n}", f"fa{n}"
+        c.text(ind, "{" if is_map else "[")
+        c.add(ind, f"{first} = True")
+        c.add(ind, "while True:")
+        _varint(c, ind + 1, cnt)
+        c.add(ind + 1, f"if {cnt} == 0: break")
+        c.add(ind + 1, f"if {cnt} < 0:")
+        c.add(ind + 2, f"{cnt} = -{cnt}")
+        _varint(c, ind + 2, "_bsz")
+        c.add(ind + 1, f"for _ in range({cnt}):")
+        c.add(ind + 2, f"if {first}: {first} = False")
+        c.add(ind + 2, "else: o += ','")
+        if is_map:
+            _varint(c, ind + 2, "kln")
+            _slice_text(c, ind + 2, "kln", "")
+            c.text(ind + 2, ":")
+        value(c, ind + 2, ft.values if is_map else ft.items)
+        c.text(ind, "}" if is_map else "]")
+
+    def record(c: _Code, ind: int, rec: AvroSchema) -> None:
         """Append the record's full '{...}' JSON to o (nested inline;
         cycle members referenced from fields go through rec_fn calls, so
         generation always terminates)."""
-        out: list[str] = []
-        first = True
-        for f in rec.fields or []:
-            prefix = ("{" if first else ",") + json.dumps(f.name, ensure_ascii=False) + ":"
-            first = False
-            out.append(f"    o += {prefix!r}\n")
-            snip = field_snippet(f.type)
-            if snip is None:
-                return None
-            out.append(snip)
-        out.append("    o += '}'\n" if not first else "    o += '{}'\n")
-        return "".join(out)
+        fields = rec.fields or []
+        for i, f in enumerate(fields):
+            c.text(ind, ("," if i else "{") + json.dumps(f.name, ensure_ascii=False) + ":")
+            value(c, ind, f.type)
+        c.text(ind, "}" if fields else "{}")
 
-    body = record_snippet(schema)
-    if body is None:
+    try:
+        top = function("_fused", schema)
+    except _Unfusable:
         return None
-    src = "".join(rec_fn_srcs) + (
-        "def _fused(buf, pos):\n    blen = len(buf)\n    o = ''\n"
-        + body
-        + "    return o, pos\n"
-    )
-    ns: dict[str, object] = {
-        "_unpack_float": _unpack_float,
-        "_unpack_double": _unpack_double,
-        "_esc": _esc,
-        "_wf": _wf,
-        "_trunc": _trunc,
-        "_bad_union": _bad_union,
-        **consts,
-    }
-    exec(src, ns)  # noqa: S102 — source is generated from the schema, no user input
+    ns: dict[str, object] = {**_HELPERS, **consts}
+    # cycle functions first: each body resolves its callees at call time
+    exec("".join(rec_fn_srcs) + top, ns)  # noqa: S102 — source is generated from the schema, no user input
     return ns["_fused"]

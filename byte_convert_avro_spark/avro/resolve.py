@@ -45,6 +45,8 @@ from byte_convert_avro_spark.avro.binary import (
     _compile,
     _need,
     _read_long,
+    bad_enum,
+    bad_union,
 )
 from byte_convert_avro_spark.avro.schema import AvroSchema, parse_schema
 
@@ -159,6 +161,8 @@ def _resolve(w: AvroSchema, r: AvroSchema, memo: dict[tuple[int, int], Reader]) 
 
         def read_union_union(buf: memoryview, pos: int) -> tuple[Any, int]:
             i, pos = _read_long(buf, pos)
+            if not 0 <= i < len(branch_readers):
+                bad_union(i)
             rd = branch_readers[i]
             if rd is None:
                 raise SchemaResolutionError(
@@ -203,6 +207,8 @@ def _resolve(w: AvroSchema, r: AvroSchema, memo: dict[tuple[int, int], Reader]) 
 
         def read_union_scalar(buf: memoryview, pos: int) -> tuple[Any, int]:
             i, pos = _read_long(buf, pos)
+            if not 0 <= i < len(per_branch):
+                bad_union(i)
             rd = per_branch[i]
             if rd is None:
                 raise SchemaResolutionError(
@@ -286,6 +292,8 @@ def _resolve(w: AvroSchema, r: AvroSchema, memo: dict[tuple[int, int], Reader]) 
 
         def read_enum(buf: memoryview, pos: int) -> tuple[str, int]:
             i, pos = _read_long(buf, pos)
+            if not 0 <= i < len(wsyms):
+                bad_enum(i)
             sym = wsyms[i]
             if sym in rset:
                 return sym, pos

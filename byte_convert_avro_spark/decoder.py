@@ -77,35 +77,24 @@ def _decode_one(payload: bytes, parser: CachedParser, is_key: bool) -> bytes:
     if payload[0] != MAGIC_BYTE:
         raise WireFormatError("Unknown magic byte!")
     (schema_id,) = _unpack_be_int(payload, 1)
-    schema, reader, schema_str, esc_schema, jsonw, fused, fused_key = parser.get(schema_id)
+    (_, reader, schema_str, _, jsonw, fused, fused_key,
+     value_prefix, value_suffix, key_suffix) = parser.get(schema_id)
+    # The envelope frame around the message is pre-encoded per schema id
+    # (schema_store.CachedParser.get): per record only the message text is
+    # escaped and UTF-8-encoded.
     if is_key:
-        # key path uses the fused decoder only when the originSchema splice
-        # is collision-free (schema_store.CachedParser.get)
-        fused = fused_key
-
-    if fused is not None:
-        # record fast path: one generated function decodes the Avro body
-        # AND emits the Avro-JSON text (byte-identical to the general
-        # path; avro/fused.py)
-        msg, _pos = fused(memoryview(payload), WIRE_PREFIX_LEN)
-        if is_key:
+        if fused_key is not None:
             # O15 envelope = the record object with originSchema appended
             # as its last field — splice it into the closing brace (same
             # bytes as dict-insertion + dumps: schema field order, then
-            # originSchema)
-            sep = "," if len(msg) > 2 else ""
-            return (
-                msg[:-1] + sep + '"originSchema":' + esc_schema + "}"
-            ).encode("utf-8")
-        return (
-            '{"originSchema":' + esc_schema
-            + ',"originMessage":' + _esc_json(msg)
-            + ',"originSchemaId":' + str(schema_id) + "}"
-        ).encode("utf-8")
-
-    value, _pos = reader(memoryview(payload), WIRE_PREFIX_LEN)
-    if is_key:
+            # originSchema).  The key decoder is None when that splice
+            # would collide with a field of the record.
+            msg, _pos = fused_key(payload, WIRE_PREFIX_LEN)
+            if len(msg) == 2:  # empty record: no separating comma
+                return b"{" + key_suffix[1:]
+            return msg[:-1].encode() + key_suffix
         # O15: decoded object + originSchema field
+        value, _pos = reader(memoryview(payload), WIRE_PREFIX_LEN)
         jv = to_avro_json(value)
         if isinstance(jv, dict):
             env = dict(jv)
@@ -114,15 +103,17 @@ def _decode_one(payload: bytes, parser: CachedParser, is_key: bool) -> bytes:
             env = {"value": jv, "originSchema": schema_str}
         return json.dumps(env, separators=(",", ":"), ensure_ascii=False).encode("utf-8")
     # O16: string-wrapped message + schema + id (field order pinned by the
-    # golden test).  Assembled directly: the compiled per-schema writer
-    # emits the Avro-JSON message in one pass, the escaped schema is cached
-    # per id, and only the message text needs the (C-accelerated) escape —
-    # no per-record dict serialization anywhere.
-    return (
-        '{"originSchema":' + esc_schema
-        + ',"originMessage":' + _esc_json(jsonw(value))
-        + ',"originSchemaId":' + str(schema_id) + "}"
-    ).encode("utf-8")
+    # golden test).  The message is the fused record decoder's Avro-JSON
+    # text (avro/fused.py) or, outside its subset, the compiled reader +
+    # compiled per-schema writer's — same bytes, no per-record dict
+    # serialization on either path; only the message text needs the
+    # (C-accelerated) escape.
+    if fused is not None:
+        msg, _pos = fused(payload, WIRE_PREFIX_LEN)
+    else:
+        value, _pos = reader(memoryview(payload), WIRE_PREFIX_LEN)
+        msg = jsonw(value)
+    return value_prefix + _esc_json(msg).encode() + value_suffix
 
 
 def make_decode_udf(

@@ -28,7 +28,7 @@ from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Any, Protocol
 
-from byte_convert_avro_spark.avro.schema import AvroSchema, parse_schema
+from byte_convert_avro_spark.avro.schema import parse_schema
 
 
 class SchemaLookupError(KeyError):
@@ -241,21 +241,28 @@ class CachedParser:
 
     def __init__(self, store: SchemaStore) -> None:
         self.store = store
-        self._by_id: dict[int, tuple[AvroSchema, Any, str, str, Any]] = {}
+        self._by_id: dict[int, tuple] = {}
 
     def get(self, schema_id: int):
         """-> (parsed schema, compiled binary reader, canonical schema
         string, JSON-escaped schema string, compiled Avro-JSON writer,
-        fused value decoder, fused key decoder).
-        The escaped schema is cached because the value envelope embeds it
-        in every record; the compiled writer replaces a per-record
-        tree-walk + json.dumps with one schema-driven pass.
+        fused value decoder, fused key decoder, value envelope prefix,
+        value envelope suffix, key envelope suffix).
+        The compiled writer replaces a per-record tree-walk + json.dumps
+        with one schema-driven pass.
 
         The key decoder is the same fused function, but disabled (None)
         when the writer schema itself has a top-level ``originSchema``
         field: the key envelope OVERWRITES that field (reference:
         ObjectNode.put replaces in place), which the fused append-only
-        splice cannot express — that schema class takes the general path."""
+        splice cannot express — that schema class takes the general path.
+
+        The last three fields are the envelope frame, UTF-8-encoded once
+        per id because every record of the id repeats it: the value
+        envelope is ``{"originSchema":<escaped schema>,"originMessage":``
+        + the escaped message + ``,"originSchemaId":<id>}``, and a fused
+        key envelope is the record's JSON minus its closing brace +
+        ``,"originSchema":<escaped schema>}``."""
         hit = self._by_id.get(schema_id)
         if hit is not None:
             return hit
@@ -268,6 +275,7 @@ class CachedParser:
         text = self.store.get_schema_text(schema_id)
         parsed = parse_schema(text)
         canonical = parsed.canonical_str()
+        esc_schema = encode_basestring(canonical)
         fused = compile_fused(parsed)
         key_collision = parsed.kind == "record" and any(
             f.name == "originSchema" for f in parsed.fields or []
@@ -276,11 +284,14 @@ class CachedParser:
             parsed,
             compile_reader(parsed),
             canonical,
-            encode_basestring(canonical),
+            esc_schema,
             compile_json_writer(parsed),
-            # fused decode->JSON codegen for flat records; None -> general path
+            # fused decode->JSON codegen for records; None -> general path
             fused,
             None if key_collision else fused,
+            f'{{"originSchema":{esc_schema},"originMessage":'.encode(),
+            f',"originSchemaId":{schema_id}}}'.encode(),
+            f',"originSchema":{esc_schema}}}'.encode(),
         )
         self._by_id[schema_id] = entry
         return entry
