@@ -3,11 +3,12 @@ Avro-JSON encode), implemented from the public Avro 1.11 specification
 (https://avro.apache.org/docs/current/specification/).
 
 The container ships no ``fastavro``/``avro`` wheel and no ``spark-avro``
-connector jar, so the engine carries its own minimal generic codec.  On a
-real cluster with ``org.apache.spark:spark-avro`` on the classpath the
-single-schema fast path should use native ``from_avro`` instead (see
-``decoder.py``); this codec is the general per-record-schema path the
-reference implements with ``GenericDatumReader`` (AvroTransform.java:241-243).
+connector jar, so the engine carries its own minimal generic codec: the
+per-record-schema decode the reference implements with
+``GenericDatumReader`` (AvroTransform.java:241-243).  The decode stage runs
+the fused decode→Avro-JSON codegen (``fused.py``) for every writer schema;
+the closure-tree reader (``binary.py``) serves OCF files, schema
+resolution and the tests, which use it as the reference.
 """
 
 from byte_convert_avro_spark.avro.schema import AvroSchema, parse_schema

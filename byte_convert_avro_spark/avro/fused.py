@@ -1,14 +1,15 @@
-"""Fused decode→Avro-JSON codegen for record schemas.
+"""Fused decode→Avro-JSON codegen: the per-record body decoder.
 
-For record schemas built from primitives/enums/fixed/nested records/
-arrays/maps/unions (any branch count, nested anywhere) this module
-generates ONE Python function per schema — varint/zigzag decoding inlined
-(no per-field call), JSON text emitted directly (no intermediate dict, no
-_UnionValue allocations, field names and union labels escaped at compile
-time).  Truncated payloads raise (bounds check before every length-prefixed
-slice) — EOF parity with the general reader and the JVM BinaryDecoder.
-Out-of-range union and enum indexes raise, negative ones included, with
-the general reader's messages.
+For every writer schema (a record or any other top level, built from
+primitives/enums/fixed/nested records/arrays/maps/unions of any branch
+count, nested anywhere) this module generates ONE Python function:
+varint/zigzag decoding inlined (no per-field call), JSON text emitted
+directly (no intermediate dict, no _UnionValue allocations, field names
+and union labels escaped at compile time).  Truncated payloads raise
+(bounds check before every length-prefixed slice) — EOF parity with the
+general reader and the JVM BinaryDecoder.  Out-of-range union and enum
+indexes raise, negative ones included, with the general reader's
+messages; an empty union has no in-range index.
 
 The generated function takes ``(buf, pos)`` where ``buf`` is ``bytes`` or
 any buffer (a memoryview is copied to ``bytes`` once at entry), and keeps
@@ -35,9 +36,11 @@ recursion, with everything off-cycle still inlined.  Decode-time recursion
 depth equals data nesting depth, the same bound the general
 closure-tree reader has.
 
-A non-record top level returns None and the
-engine falls back to the general compiled reader + compiled JSON writer —
-same output bytes, pinned by the equality property test.
+A map whose body repeats a key renders each key once, in first-seen
+position with the last value, as the general reader's dict (and Java's
+map-backed ``GenericDatumReader``) does: each map keeps a set of its raw
+keys, and a function that saw a repeat re-renders its text once through
+``json.loads``/``json.dumps`` before returning.
 
 Output parity: byte-identical to
 ``json.dumps(to_avro_json(reader(payload)), separators=(",", ":"),
@@ -81,6 +84,12 @@ def _wf(v: float) -> str:
     return repr(v)
 
 
+def _canon(text: str) -> str:
+    """Avro-JSON text with each repeated map key kept once, in first-seen
+    position with the last value — the general reader's dict semantics."""
+    return json.dumps(json.loads(text), separators=(",", ":"), ensure_ascii=False)
+
+
 #: names every generated function binds as default arguments
 _HELPERS = {
     "_bytes": bytes,
@@ -88,6 +97,7 @@ _HELPERS = {
     "_repr": repr,
     "_esc": _esc,
     "_wf": _wf,
+    "_canon": _canon,
     "_zz": _ZZ,
     "_zzt": _ZZ_TEXT,
     "_unpack_float": _unpack_float,
@@ -98,18 +108,16 @@ _HELPERS = {
 }
 
 
-class _Unfusable(Exception):
-    """The schema holds a type the codegen does not cover."""
-
-
 class _Code:
     """Lines of one generated function body.  ``text`` appends a constant
     to the output string ``o``; a constant that directly follows another at
-    the same indent (so in the same block, in sequence) joins it."""
+    the same indent (so in the same block, in sequence) joins it.
+    ``has_map`` marks a body that may see a repeated map key."""
 
     def __init__(self) -> None:
         # [indent, source line, constant text or None]
         self.lines: list[list] = [[1, "", ""]]  # `o = ''`, itself a constant
+        self.has_map = False
 
     def add(self, ind: int, line: str) -> None:
         self.lines.append([ind, line, None])
@@ -150,11 +158,15 @@ def _varint_tail(c: _Code, ind: int) -> None:
     c.add(ind + 1, "shift += 7")
 
 
-def _slice_text(c: _Code, ind: int, ln: str, codec: str) -> None:
-    """Append the escaped text of ``ln`` bytes at pos (bounds-checked)."""
+def _slice_text(c: _Code, ind: int, ln: str, codec: str, keys: str | None = None) -> None:
+    """Append the escaped text of ``ln`` bytes at pos (bounds-checked); a
+    map key's raw bytes also go into the set named ``keys``."""
     c.add(ind, f"e = pos + {ln}")
     c.add(ind, f"if {ln} < 0 or e > blen: _trunc(pos, {ln}, blen)")
-    c.add(ind, f"o += _esc(buf[pos:e].decode({codec})); pos = e")
+    if keys is None:
+        c.add(ind, f"o += _esc(buf[pos:e].decode({codec})); pos = e")
+    else:
+        c.add(ind, f"k = buf[pos:e]; {keys}.add(k); o += _esc(k.decode({codec})); pos = e")
 
 
 def _recursive_records(root: AvroSchema) -> set[int]:
@@ -194,26 +206,26 @@ def _recursive_records(root: AvroSchema) -> set[int]:
 
 
 def compile_fused(schema: AvroSchema):
-    """-> fn(buf: bytes|memoryview, pos: int) -> (Avro-JSON text, end pos),
-    or None when the schema is outside the fusable subset (non-record top
-    level, empty unions)."""
-    if schema.kind != "record":
-        return None
+    """-> fn(buf: bytes|memoryview, pos: int) -> (Avro-JSON text, end pos)
+    for any parsed writer schema."""
     consts: dict[str, object] = {}
     counter = iter(range(1_000_000))
     cyclic = _recursive_records(schema)
     rec_fn_names: dict[int, str] = {}
     rec_fn_srcs: list[str] = []
 
-    def function(name: str, rec: AvroSchema) -> str:
+    def function(name: str, node: AvroSchema) -> str:
         c = _Code()
-        record(c, 1, rec)
+        # a cycle member's own function renders its body, not a call to itself
+        (record if node.kind == "record" else value)(c, 1, node)
         bound = ", ".join(f"{h}={h}" for h in [*_HELPERS, *consts])
         return (
             f"def {name}(buf, pos, {bound}):\n"
             "    if type(buf) is not _bytes: buf = _bytes(buf)\n"
             "    blen = len(buf)\n"
+            + ("    dup = False\n" if c.has_map else "")
             + c.render()
+            + ("    if dup: o = _canon(o)\n" if c.has_map else "")
             + "    return o, pos\n"
         )
 
@@ -252,7 +264,7 @@ def compile_fused(schema: AvroSchema):
         elif k in ("array", "map"):
             collection(c, ind, ft)
         else:
-            raise _Unfusable(k)
+            raise ValueError(f"cannot compile fused decoder for kind {k!r}")
 
     def primitive(c: _Code, ind: int, name: str) -> None:
         if name in ("int", "long"):
@@ -273,15 +285,13 @@ def compile_fused(schema: AvroSchema):
         elif name == "null":
             c.text(ind, "null")
         else:
-            raise _Unfusable(name)
+            raise ValueError(f"cannot compile fused decoder for {name!r}")
 
     def union(c: _Code, ind: int, ft: AvroSchema) -> None:
         # arbitrary branch count, any fusable branch type (so unions
         # nested inside arrays/maps fuse too); an out-of-range index
         # raises instead of desyncing (general-reader parity)
         branches = ft.fields or []
-        if not branches:
-            raise _Unfusable("empty union")
         bi = f"bi{next(counter)}"
         _varint(c, ind, bi)
         for j, b in enumerate(branches):
@@ -292,28 +302,36 @@ def compile_fused(schema: AvroSchema):
             c.text(ind + 1, "{" + json.dumps(b.union_label) + ":")
             value(c, ind + 1, b)
             c.text(ind + 1, "}")
-        c.add(ind, f"else: _bad_union({bi})")
+        # an empty union has no branch to test: any index is out of range
+        c.add(ind, f"else: _bad_union({bi})" if branches else f"_bad_union({bi})")
 
     def collection(c: _Code, ind: int, ft: AvroSchema) -> None:
         is_map = ft.kind == "map"
         n = next(counter)
-        cnt, first = f"cnt{n}", f"fa{n}"
+        cnt, first, keys, nkeys = f"cnt{n}", f"fa{n}", f"ks{n}", f"nk{n}"
         c.text(ind, "{" if is_map else "[")
         c.add(ind, f"{first} = True")
+        if is_map:
+            c.has_map = True
+            c.add(ind, f"{keys} = set(); {nkeys} = 0")
         c.add(ind, "while True:")
         _varint(c, ind + 1, cnt)
         c.add(ind + 1, f"if {cnt} == 0: break")
         c.add(ind + 1, f"if {cnt} < 0:")
         c.add(ind + 2, f"{cnt} = -{cnt}")
         _varint(c, ind + 2, "_bsz")
+        if is_map:
+            c.add(ind + 1, f"{nkeys} += {cnt}")
         c.add(ind + 1, f"for _ in range({cnt}):")
         c.add(ind + 2, f"if {first}: {first} = False")
         c.add(ind + 2, "else: o += ','")
         if is_map:
             _varint(c, ind + 2, "kln")
-            _slice_text(c, ind + 2, "kln", "")
+            _slice_text(c, ind + 2, "kln", "", keys)
             c.text(ind + 2, ":")
         value(c, ind + 2, ft.values if is_map else ft.items)
+        if is_map:
+            c.add(ind, f"if len({keys}) != {nkeys}: dup = True")
         c.text(ind, "}" if is_map else "]")
 
     def record(c: _Code, ind: int, rec: AvroSchema) -> None:
@@ -326,10 +344,7 @@ def compile_fused(schema: AvroSchema):
             value(c, ind, f.type)
         c.text(ind, "}" if fields else "{}")
 
-    try:
-        top = function("_fused", schema)
-    except _Unfusable:
-        return None
+    top = function("_fused", schema)
     ns: dict[str, object] = {**_HELPERS, **consts}
     # cycle functions first: each body resolves its callees at call time
     exec("".join(rec_fn_srcs) + top, ns)  # noqa: S102 — source is generated from the schema, no user input

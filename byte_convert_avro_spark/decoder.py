@@ -25,11 +25,10 @@ task, so a reused worker resolves each schema id again in its next task
 (reference: one synchronized LRU across Connect task threads,
 AvroTransform.java:108).
 
-On a cluster with ``spark-avro`` available, single-schema topics should use
-native ``from_avro`` on ``wire.body(col)`` instead — that keeps the whole
-stage in codegen.  This container has no spark-avro jar, so the general
-path is the only path; it remains the only non-codegen operator in the
-pipeline (BASELINE.md engineering budget).
+Every record body, whatever its writer schema, decodes through one
+function: the schema's fused decode→Avro-JSON codegen (``avro/fused.py``).
+The UDF is the only non-codegen operator in the pipeline (BASELINE.md
+engineering budget).
 """
 
 from __future__ import annotations
@@ -45,7 +44,6 @@ from pyspark.sql import types as T
 
 from json.encoder import encode_basestring as _esc_json
 
-from byte_convert_avro_spark.avro.jsonenc import to_avro_json
 from byte_convert_avro_spark.schema_store import CachedParser, SchemaStore
 from byte_convert_avro_spark.wire import MAGIC_BYTE, WIRE_PREFIX_LEN
 
@@ -77,8 +75,9 @@ def _decode_one(payload: bytes, parser: CachedParser, is_key: bool) -> bytes:
     if payload[0] != MAGIC_BYTE:
         raise WireFormatError("Unknown magic byte!")
     (schema_id,) = _unpack_be_int(payload, 1)
-    (_, reader, schema_str, _, jsonw, fused, fused_key,
+    (_, _, schema_str, _, _, fused, fused_key,
      value_prefix, value_suffix, key_suffix) = parser.get(schema_id)
+    msg, _pos = fused(payload, WIRE_PREFIX_LEN)
     # The envelope frame around the message is pre-encoded per schema id
     # (schema_store.CachedParser.get): per record only the message text is
     # escaped and UTF-8-encoded.
@@ -87,32 +86,20 @@ def _decode_one(payload: bytes, parser: CachedParser, is_key: bool) -> bytes:
             # O15 envelope = the record object with originSchema appended
             # as its last field — splice it into the closing brace (same
             # bytes as dict-insertion + dumps: schema field order, then
-            # originSchema).  The key decoder is None when that splice
-            # would collide with a field of the record.
-            msg, _pos = fused_key(payload, WIRE_PREFIX_LEN)
+            # originSchema).  The key decoder is None for a non-record top
+            # level and when the splice would collide with a record field.
             if len(msg) == 2:  # empty record: no separating comma
                 return b"{" + key_suffix[1:]
             return msg[:-1].encode() + key_suffix
-        # O15: decoded object + originSchema field
-        value, _pos = reader(memoryview(payload), WIRE_PREFIX_LEN)
-        jv = to_avro_json(value)
-        if isinstance(jv, dict):
-            env = dict(jv)
-            env["originSchema"] = schema_str
-        else:
-            env = {"value": jv, "originSchema": schema_str}
+        # O15: decoded object + originSchema field (ObjectNode.put: an
+        # existing originSchema is replaced in place).  Compact Avro-JSON
+        # text survives a loads/dumps round trip byte for byte.
+        jv = json.loads(msg)
+        env = jv if isinstance(jv, dict) else {"value": jv}
+        env["originSchema"] = schema_str
         return json.dumps(env, separators=(",", ":"), ensure_ascii=False).encode("utf-8")
     # O16: string-wrapped message + schema + id (field order pinned by the
-    # golden test).  The message is the fused record decoder's Avro-JSON
-    # text (avro/fused.py) or, outside its subset, the compiled reader +
-    # compiled per-schema writer's — same bytes, no per-record dict
-    # serialization on either path; only the message text needs the
-    # (C-accelerated) escape.
-    if fused is not None:
-        msg, _pos = fused(payload, WIRE_PREFIX_LEN)
-    else:
-        value, _pos = reader(memoryview(payload), WIRE_PREFIX_LEN)
-        msg = jsonw(value)
+    # golden test); only the message text needs the (C-accelerated) escape.
     return value_prefix + _esc_json(msg).encode() + value_suffix
 
 

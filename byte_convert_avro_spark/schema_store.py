@@ -248,14 +248,16 @@ class CachedParser:
         string, JSON-escaped schema string, compiled Avro-JSON writer,
         fused value decoder, fused key decoder, value envelope prefix,
         value envelope suffix, key envelope suffix).
-        The compiled writer replaces a per-record tree-walk + json.dumps
-        with one schema-driven pass.
+        The fused decoder (``avro/fused.py``) is the only body decoder the
+        decode stage calls; the compiled reader and JSON writer stay in the
+        entry for the layer probes that time them.
 
         The key decoder is the same fused function, but disabled (None)
-        when the writer schema itself has a top-level ``originSchema``
-        field: the key envelope OVERWRITES that field (reference:
-        ObjectNode.put replaces in place), which the fused append-only
-        splice cannot express — that schema class takes the general path.
+        when the record's JSON cannot take ``originSchema`` as an appended
+        last field: for a non-record top level, and when the writer schema
+        itself has a top-level ``originSchema`` field, which the key
+        envelope OVERWRITES (reference: ObjectNode.put replaces in place).
+        Those keys are re-parsed and re-serialized instead.
 
         The last three fields are the envelope frame, UTF-8-encoded once
         per id because every record of the id repeats it: the value
@@ -277,8 +279,8 @@ class CachedParser:
         canonical = parsed.canonical_str()
         esc_schema = encode_basestring(canonical)
         fused = compile_fused(parsed)
-        key_collision = parsed.kind == "record" and any(
-            f.name == "originSchema" for f in parsed.fields or []
+        splice_key = parsed.kind == "record" and all(
+            f.name != "originSchema" for f in parsed.fields or []
         )
         entry = (
             parsed,
@@ -286,9 +288,8 @@ class CachedParser:
             canonical,
             esc_schema,
             compile_json_writer(parsed),
-            # fused decode->JSON codegen for records; None -> general path
             fused,
-            None if key_collision else fused,
+            fused if splice_key else None,
             f'{{"originSchema":{esc_schema},"originMessage":'.encode(),
             f',"originSchemaId":{schema_id}}}'.encode(),
             f',"originSchema":{esc_schema}}}'.encode(),

@@ -169,7 +169,7 @@ def test_key_envelope_originschema_collision_matches_general_path():
     """When the writer schema already has an `originSchema` field, the key
     envelope OVERWRITES it in place (dict/ObjectNode.put semantics) — the
     fused append-only splice can't express that, so this schema class must
-    take the general path and produce exactly the general-path bytes."""
+    re-serialize the key and put originSchema in its schema position."""
     store = LocalSchemaStore()
     store.register(COLLIDING_SCHEMA, 9)
     parser = CachedParser(store)

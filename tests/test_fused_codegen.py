@@ -4,16 +4,19 @@ path, on the values its fast paths special-case.
 Every example is checked three ways: the fused function on ``bytes``, on a
 ``memoryview`` and on a ``bytearray`` equals the specification text
 (``json.dumps(to_avro_json(reader(...)))``); the value and key envelopes of
-``_decode_one`` are the ``json.dumps`` envelopes of that text on the fused
-path and on the general path alike; and the payload cut at every offset
-raises the same error on both paths.  Out-of-range
-union and enum indexes, negative ones included, raise on every reader.
+``_decode_one`` are the ``json.dumps`` envelopes of that text, with the key
+spliced and with it re-serialized alike; and the payload cut at every
+offset raises the same error in the fused function and the general reader.
+Map blocks repeat keys, which render once with the last value, as the
+general reader's dict does.  Out-of-range union and enum indexes, negative
+ones included, raise on every reader.
 """
 
 from __future__ import annotations
 
 import json
 import math
+import struct
 
 import pytest
 from hypothesis import given, settings
@@ -38,7 +41,8 @@ TREE = {
 }
 
 #: (field name, field type); ``arr`` and ``m`` are written with
-#: hand-chosen blocks (see ``_blocks``), every other field by the encoder
+#: hand-chosen blocks (see ``_blocks``), every other field by the encoder;
+#: ``m``'s entries are (key, value) pairs whose keys may repeat
 FIELDS = [
     ("i", "int"),
     ("l", "long"),
@@ -77,6 +81,8 @@ longs = st.sampled_from(LONG_EDGES) | st.integers(-(2**63), 2**63 - 1)
 floats32 = st.sampled_from([x for x in FLOAT_EDGES if abs(x) < 1e38 or x != x or math.isinf(x)]) | st.floats(width=32)
 doubles = st.sampled_from(FLOAT_EDGES) | st.floats()
 texts = st.sampled_from(TEXT_EDGES) | st.text(max_size=12)
+#: map keys drawn from a few so that a block list often repeats one
+map_keys = st.sampled_from(["a", "b", "zürich"]) | texts
 tree_v = st.none() | longs.map(lambda x: {"long": x}) | texts.map(lambda s: {"string": s})
 trees = st.recursive(
     st.fixed_dictionaries({"v": tree_v, "kids": st.just([])}),
@@ -103,7 +109,7 @@ VALUES = st.fixed_dictionaries({
     "pts": st.lists(st.fixed_dictionaries({"x": ints}), max_size=3),
     "t": trees,
     "arr": st.lists(longs, max_size=6),
-    "m": st.dictionaries(texts, texts, max_size=4),
+    "m": st.lists(st.tuples(map_keys, texts), max_size=6),
 })
 #: per block: (item count, written with a negative count + byte size?)
 BLOCKS = st.lists(st.tuples(st.integers(1, 3), st.booleans()), max_size=4)
@@ -140,21 +146,21 @@ def _body(v: dict, arr_plan, map_plan) -> bytes:
             out += _blocks([schemaless_encode(x, "long") for x in v["arr"]], arr_plan)
         elif f.name == "m":
             out += _blocks([schemaless_encode(k, "string") + schemaless_encode(x, "string")
-                            for k, x in v["m"].items()], map_plan)
+                            for k, x in v["m"]], map_plan)
         else:
             out += schemaless_encode(v[f.name], f.type)
     return out
 
 
 def _parsers(schema: str, sid: int) -> tuple[CachedParser, CachedParser]:
-    """A parser whose entry takes the fused path, and one whose entry has
-    the fused decoders removed so ``_decode_one`` takes the general path."""
+    """A parser whose entry splices the key envelope, and one whose entry
+    has the key decoder removed so ``_decode_one`` re-serializes it."""
     store = LocalSchemaStore({sid: schema})
-    fused, general = CachedParser(store), CachedParser(store)
-    entry = fused.get(sid)
+    splice, reparse = CachedParser(store), CachedParser(store)
+    entry = splice.get(sid)
     assert entry[5] is not None and entry[6] is not None
-    general._by_id[sid] = entry[:5] + (None, None) + entry[7:]
-    return fused, general
+    reparse._by_id[sid] = entry[:6] + (None,) + entry[7:]
+    return splice, reparse
 
 
 def _error(fn, *args) -> type | None:
@@ -194,8 +200,9 @@ def test_fused_equals_general_on_edge_values(v, arr_plan, map_plan):
         assert _decode_one(payload, parser, False) == value_env
         assert _decode_one(payload, parser, True) == key_env
 
-    # a cut payload raises the same error on both paths: a short slice is
-    # a TruncatedPayloadError, a varint or float past the end is not
+    # a cut payload raises the same error in the fused function and the
+    # general reader: a short slice is a TruncatedPayloadError, a varint
+    # or float past the end is not
     for cut in range(len(body)):
         short = body[:cut]
         err = _error(reader, memoryview(short), 0)
@@ -212,6 +219,37 @@ def test_empty_record_key_envelope_equals_general():
     for is_key in (False, True):
         assert _decode_one(payload, fp, is_key) == _decode_one(payload, gp, is_key)
     assert json.loads(_decode_one(payload, fp, True))["originSchema"]
+
+
+# -- repeated map keys ---------------------------------------------------
+
+_pack_double = struct.Struct("<d").pack
+#: map<double> body a=1.5, b=+Inf, a=-0.0 in one block
+REPEAT_BODY = (b"\x06" + b"\x02a" + _pack_double(1.5) + b"\x02b" + _pack_double(math.inf)
+               + b"\x02a" + _pack_double(-0.0) + b"\x00")
+REPEAT_TEXT = '{"a":-0.0,"b":"Infinity"}'
+DOUBLE_MAP = {"type": "map", "values": "double"}
+NODE = {"type": "record", "name": "Node", "fields": [
+    {"name": "m", "type": DOUBLE_MAP}, {"name": "next", "type": ["null", "Node"]}]}
+
+
+@pytest.mark.parametrize("schema, body, text", [
+    ({"type": "record", "name": "M", "fields": [{"name": "m", "type": DOUBLE_MAP}]},
+     REPEAT_BODY, '{"m":' + REPEAT_TEXT + "}"),
+    (DOUBLE_MAP, REPEAT_BODY, REPEAT_TEXT),
+    # a record on a cycle compiles to a function of its own
+    (NODE, REPEAT_BODY + b"\x02" + REPEAT_BODY + b"\x00",
+     '{"m":' + REPEAT_TEXT + ',"next":{"Node":{"m":' + REPEAT_TEXT + ',"next":null}}}'),
+], ids=["record_field", "top_level", "recursive_record"])
+def test_repeated_map_key_keeps_first_position_and_last_value(schema, body, text):
+    """A map that repeats a key renders it once, where it first appeared,
+    with its last value: the general reader's dict (and Java's map-backed
+    GenericDatumReader), not a JSON object with a duplicate key."""
+    schema = json.dumps(schema)
+    datum, end = compile_reader(schema)(memoryview(body), 0)
+    assert end == len(body)
+    assert _dumps(to_avro_json(datum)).decode() == text
+    assert compile_fused(parse_schema(schema))(body, 0) == (text, end)
 
 
 # -- out-of-range union and enum indexes ---------------------------------

@@ -223,13 +223,95 @@ def test_fused_codegen_equals_spec(v):
     assert pos == len(buf)
 
 
-def test_fused_refuses_out_of_subset():
-    """Outside the fused subset (non-record top level) compile_fused must
-    return None, never a wrong function.  (Recursive records are IN the
-    subset — see test_fused_recursive_linked_list_equals_spec.)"""
+_REC_R = {"type": "record", "name": "R", "fields": [{"name": "x", "type": "int"}]}
+_UNION = ["null", "string", _REC_R]
+#: name -> (writer schema, datum) for non-record top levels
+NON_RECORD = {
+    "int": ("int", -7),
+    "long": ("long", 2**40),
+    "float": ("float", 0.5),
+    "double_nan": ("double", float("nan")),
+    "double_-inf": ("double", float("-inf")),
+    "boolean": ("boolean", True),
+    "string": ("string", 'héllo "q"\n'),
+    "bytes": ("bytes", b"\x00\xff"),
+    "null": ("null", None),
+    "array_of_unions": ({"type": "array", "items": ["null", "double", "string"]}, [None, -0.0, "x"]),
+    "map": ({"type": "map", "values": "long"}, {"a": 1, "zürich": -2}),
+    "union_null": (_UNION, None),
+    "union_string": (_UNION, "s"),
+    "union_record": (_UNION, {"x": 3}),
+    "enum": ({"type": "enum", "name": "E", "symbols": ["A", "B"]}, "B"),
+    "fixed": ({"type": "fixed", "name": "F3", "size": 3}, b"ab\xff"),
+}
+
+
+def _spec_text(schema: str, body: bytes) -> str:
+    datum, _ = compile_reader(schema)(memoryview(body), 0)
+    return json.dumps(to_avro_json(datum), separators=(",", ":"), ensure_ascii=False)
+
+
+@pytest.mark.parametrize("schema, datum", NON_RECORD.values(), ids=NON_RECORD)
+def test_fused_non_record_top_level_equals_spec(schema, datum):
+    """Every writer schema fuses, a non-record top level included, and the
+    text equals the specification path's."""
     from byte_convert_avro_spark.avro.fused import compile_fused
 
-    assert compile_fused(parse_schema('"int"')) is None
+    schema = json.dumps(schema)
+    body = schemaless_encode(datum, schema)
+    assert compile_fused(parse_schema(schema))(body, 0) == (_spec_text(schema, body), len(body))
+
+
+def test_fused_empty_union_raises_like_reader():
+    """An empty union has no branch: the fused function reads the index and
+    raises the general reader's error."""
+    from byte_convert_avro_spark.avro.fused import compile_fused
+
+    for fn in (compile_fused(parse_schema("[]")), compile_reader("[]")):
+        with pytest.raises(ValueError, match="union branch index 0 out of range"):
+            fn(memoryview(b"\x00"), 0)
+
+
+#: (writer schema, datum) whose key envelope cannot be spliced into the
+#: record's JSON: non-record top levels and a record with its own
+#: originSchema field (overwritten in place)
+KEY_REPARSED = {
+    "string": ("string", "k1"),
+    "int": ("int", -7),
+    "map": ({"type": "map", "values": "long"}, {"a": 1, "zürich": -2}),
+    "map_with_originSchema": ({"type": "map", "values": "long"}, {"b": 1, "originSchema": 5, "c": 2}),
+    "union_null": (_UNION, None),
+    "union_string": (_UNION, "s"),
+    "union_record": (_UNION, {"x": 3}),
+    "record_with_originSchema": (
+        {"type": "record", "name": "Own", "fields": [
+            {"name": "a", "type": "double"},
+            {"name": "originSchema", "type": "string"},
+            {"name": "z", "type": {"type": "map", "values": "string"}}]},
+        {"a": float("nan"), "originSchema": "user-data", "z": {"ü": "v"}},
+    ),
+}
+
+
+@pytest.mark.parametrize("schema, datum", KEY_REPARSED.values(), ids=KEY_REPARSED)
+def test_reparsed_key_envelope_equals_general_reader(schema, datum):
+    """Keys the splice cannot build: the envelope is the general reader's
+    decoded object (a non-object under "value") with originSchema put
+    last or replaced in place, as json.dumps renders it."""
+    from byte_convert_avro_spark.decoder import _decode_one
+    from byte_convert_avro_spark.schema_store import CachedParser, LocalSchemaStore
+    from byte_convert_avro_spark.wire import encode_wire
+
+    schema = json.dumps(schema)
+    parser = CachedParser(LocalSchemaStore({4: schema}))
+    assert parser.get(4)[6] is None
+    payload = encode_wire(4, schemaless_encode(datum, schema))
+    datum_read, _ = compile_reader(schema)(memoryview(payload), 5)
+    jv = to_avro_json(datum_read)
+    env = dict(jv) if isinstance(jv, dict) else {"value": jv}
+    env["originSchema"] = parse_schema(schema).canonical_str()
+    spec = json.dumps(env, separators=(",", ":"), ensure_ascii=False).encode()
+    assert _decode_one(payload, parser, is_key=True) == spec
 
 
 @settings(max_examples=60, deadline=None)
