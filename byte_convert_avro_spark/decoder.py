@@ -114,7 +114,13 @@ def make_decode_udf(
     "t:bool" list, AvroTransform.java:286-314).  Topics absent from the map
     pass through untouched (O4, :120-121,211-213); the flag gates the key
     path only (O5, :131,216-218) — values of enabled topics always decode.
+    ``mode`` is ``PERMISSIVE`` or ``FAILFAST``; anything else raises
+    rather than quietly swallowing every decode error.
     """
+    if mode not in (PERMISSIVE, FAILFAST):
+        raise ValueError(
+            f"mode must be {PERMISSIVE!r} or {FAILFAST!r}, got {mode!r}"
+        )
     failfast = mode == FAILFAST
 
     @F.pandas_udf(_DECODE_STRUCT)
@@ -165,9 +171,6 @@ def decode_records(
     topics: dict[str, bool],
     mode: str = PERMISSIVE,
     include_headers: bool = True,
-    key_col: str = "key",
-    value_col: str = "value",
-    topic_col: str = "topic",
 ) -> DataFrame:
     """Full record transform (O4-O17): returns the input schema with
     ``key``/``value`` replaced by envelope bytes, plus an ``_error`` column
@@ -177,12 +180,12 @@ def decode_records(
     columns (topic, partition, timestamp, ...) pass through; ``headers`` is
     dropped unless ``include_headers`` (flag :52-53,68-69,110).
     """
-    for c in (topic_col, key_col, value_col):
+    for c in ("topic", "key", "value"):
         if c not in df.columns:
             raise ValueError(f"input is missing required column {c!r}")
     # O6 bytes-schema gate, enforced at plan build like the reference's
     # ByteArrayConverter requirement (ConnectSchemaUtil.java:7-13).
-    for c in (key_col, value_col):
+    for c in ("key", "value"):
         dt = df.schema[c].dataType
         if not isinstance(dt, T.BinaryType):
             raise TypeError(
@@ -190,13 +193,13 @@ def decode_records(
                 "the reference rejects non-bytes schemas (SchemaTest.java:25-57)"
             )
     udf = make_decode_udf(store, topics, mode)
-    dec = df.withColumn("_dec", udf(F.col(topic_col), F.col(key_col), F.col(value_col)))
+    dec = df.withColumn("_dec", udf(F.col("topic"), F.col("key"), F.col("value")))
     out_cols: list[Column] = []
     for c in df.columns:
-        if c == key_col:
-            out_cols.append(F.col("_dec.key_out").alias(key_col))
-        elif c == value_col:
-            out_cols.append(F.col("_dec.value_out").alias(value_col))
+        if c == "key":
+            out_cols.append(F.col("_dec.key_out").alias("key"))
+        elif c == "value":
+            out_cols.append(F.col("_dec.value_out").alias("value"))
         elif c == "headers" and not include_headers:
             continue
         else:

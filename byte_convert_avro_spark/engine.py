@@ -13,8 +13,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from byte_convert_avro_spark.decoder import PERMISSIVE, decode_records
@@ -123,32 +122,6 @@ class Engine:
             topics=self.config.topics,
             mode=self.config.mode,
             include_headers=self.config.include_headers,
-        )
-
-    # -- O1/O18 convenience wrappers --------------------------------------
-    def read_kafka_batch(self, spark: SparkSession, bootstrap: str, topics: list[str]) -> DataFrame:
-        """Kafka batch source (needs spark-sql-kafka on the classpath; absent
-        in this container — file fixtures in KAFKA_RECORD_SCHEMA shape are
-        the test path, FIXTURES.md §4)."""
-        return (
-            spark.read.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("subscribe", ",".join(topics))
-            .load()
-        )
-
-    def read_record_stream(self, spark: SparkSession, path: str) -> DataFrame:
-        """File-based stream of Kafka-shaped parquet records (test harness
-        for O1 without a broker)."""
-        return spark.readStream.schema(KAFKA_RECORD_SCHEMA).parquet(path)
-
-    def decoded_value_json(self, df: DataFrame) -> DataFrame:
-        """Convenience: transform + value envelope as string column
-        ``value_json`` + parsed ``originSchemaId``."""
-        out = self.transform(df)
-        return out.withColumn("value_json", F.col("value").cast("string")).withColumn(
-            "origin_schema_id",
-            F.get_json_object(F.col("value").cast("string"), "$.originSchemaId").cast("int"),
         )
 
     def close(self) -> None:

@@ -26,11 +26,10 @@ Hashes are md5 throughout — deterministic, engine-portable, and uniform.
 
 from __future__ import annotations
 
-import time as _time
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.operators.graph import both_directions
 from byte_convert_avro_spark.plans.stats_reset import reset_plan_stats
 
 
@@ -223,26 +222,10 @@ def lsh_candidates(
     # rank each doc's UNDIRECTED pair list (both orientations — two
     # one-sided windows would let a doc keep up to 2k pairs split
     # across its doc_a/doc_b roles); a pair survives iff it ranks within
-    # k on BOTH endpoints, i.e. both directed rows survive.  Orientations
-    # via a row-local explode, not union(self-swapped): union's branches
-    # each re-evaluate the whole candidate pipeline (see
-    # connected_components below for the measured cost of that pattern).
-    directed = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("doc"),
-                    F.col("doc_b").alias("partner"),
-                    F.col("n_bands_matched"),
-                ),
-                F.struct(
-                    F.col("doc_b").alias("doc"),
-                    F.col("doc_a").alias("partner"),
-                    F.col("n_bands_matched"),
-                ),
-            )
-        ).alias("_d")
-    ).select("_d.doc", "_d.partner", "_d.n_bands_matched")
+    # k on BOTH endpoints, i.e. both directed rows survive.
+    directed = both_directions(
+        pairs, "doc_a", "doc_b", "n_bands_matched", names=("doc", "partner")
+    )
     rk = F.row_number().over(
         W.partitionBy("doc").orderBy(F.desc("n_bands_matched"), "partner")
     )
@@ -696,10 +679,6 @@ def connected_components(
     a: str = "doc_a",
     b: str = "doc_b",
     max_iter: int = 50,
-    *,
-    _pointer_jump: bool = True,
-    _stats_reset: bool = True,
-    _instrument: dict | None = None,
 ) -> DataFrame:
     """Resolve near-dup candidate pairs into clusters: connected
     components by iterative min-label propagation.  -> (v, component)
@@ -736,7 +715,6 @@ def connected_components(
     rather than silently returning partially-propagated labels — re-run
     with a higher budget.  (Job-count bound pinned by
     tests/test_operators_direct.py::test_connected_components_one_job_per_round.)"""
-    e = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     # The static edge list's storage form is SIZE-ADAPTIVE (both A/B'd at
     # local sf0.1/sf1 — NOTES round 5):
     # - BIG graphs: CACHED pre-partitioned and pre-sorted on the join key
@@ -754,24 +732,8 @@ def connected_components(
     # round broadcast-BUILD is a driver round trip that costs more than
     # the labels shuffle it saves (measured at sf0.1) and breaks the
     # one-job-per-round property.
-    # Both directions via a row-local explode, NOT e.union(e.swapped):
-    # union's two branches each re-evaluate the full upstream pairs
-    # subtree (for LSH candidates that is the whole shingle+minhash+
-    # band-join pipeline — measured 2x the candidate-generation cost at
-    # sf0.1, r14), while explode emits both orientations from ONE
-    # evaluation of every input row.  Same row multiset -> same distinct.
     edges = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src"), F.col("dst")),
-                    F.struct(
-                        F.col("dst").alias("src"), F.col("src").alias("dst")
-                    ),
-                )
-            ).alias("_ed")
-        )
-        .select("_ed.src", "_ed.dst")
+        both_directions(pairs, a, b, names=("src", "dst"))
         .distinct()
         .repartition(F.col("src"))
         .sortWithinPartitions("src")
@@ -795,8 +757,7 @@ def connected_components(
             .withColumn("label", F.col("v"))
             .localCheckpoint()
         )
-        for round_i in range(max_iter):
-            _t0 = _time.perf_counter() if _instrument is not None else 0.0
+        for _ in range(max_iter):
             nbr_min = (
                 edges.hint("merge")
                 .join(labels.select(F.col("v").alias("src"), "label"), "src")
@@ -814,51 +775,31 @@ def connected_components(
             # customer-match chain the sf0.01 corpus never built) converge
             # inside any sane budget: diameter 10^6 needs ~20 rounds, not
             # 10^6.  Cost: one extra node-sized merge join per round.
-            # (_pointer_jump/_stats_reset/_instrument are A/B ablation
-            # knobs for tools/cc_chain_stress.py ONLY — production
-            # callers never pass them; both ablations are known-slower
-            # forms kept callable so the SCALE.md knee numbers stay
-            # reproducible against the REAL operator, not a replica.)
-            joined = labels.join(nbr_min.hint("merge"), "v", "left")
-            if _pointer_jump:
-                parent = labels.select(
-                    F.col("v").alias("label"), F.col("label").alias("jump_label")
-                )
-                joined = joined.join(parent.hint("merge"), "label", "left")
-                least_new = F.least(
-                    F.coalesce("nbr_label", "label"),
-                    F.coalesce("jump_label", "label"),
-                )
-            else:
-                least_new = F.coalesce("nbr_label", "label")
+            parent = labels.select(
+                F.col("v").alias("label"), F.col("label").alias("jump_label")
+            )
+            joined = labels.join(nbr_min.hint("merge"), "v", "left").join(
+                parent.hint("merge"), "label", "left"
+            )
+            least_new = F.least(
+                F.coalesce("nbr_label", "label"),
+                F.coalesce("jump_label", "label"),
+            )
             # reset_plan_stats: see docstring — without it the preserved
             # origin statistics square per round and the driver drowns in
             # BigInteger arithmetic by round ~20.
-            new_labels = joined.select(
-                "v",
-                F.least(F.col("label"), least_new).alias("label"),
-                (least_new < F.col("label")).cast("int").alias("_chg"),
-            ).localCheckpoint(eager=False)
-            if _stats_reset:
-                new_labels = reset_plan_stats(new_labels)
+            new_labels = reset_plan_stats(
+                joined.select(
+                    "v",
+                    F.least(F.col("label"), least_new).alias("label"),
+                    (least_new < F.col("label")).cast("int").alias("_chg"),
+                ).localCheckpoint(eager=False)
+            )
             # this aggregate is the round's ONE action: computing it runs
             # every partition of new_labels, materializing the lazy
             # checkpoint in the same job
             changed = new_labels.agg(F.sum("_chg")).first()[0]
             labels = new_labels.drop("_chg")
-            if _instrument is not None:
-                _instrument.setdefault("round_sec", []).append(
-                    round(_time.perf_counter() - _t0, 3)
-                )
-                _instrument["rounds"] = round_i + 1
-                stop_after = _instrument.get("abort_round_sec")
-                if (
-                    changed
-                    and stop_after
-                    and _instrument["round_sec"][-1] > stop_after
-                ):
-                    _instrument["aborted"] = True
-                    return labels.select("v", F.col("label").alias("component"))
             if not changed:
                 return labels.select("v", F.col("label").alias("component"))
         raise RuntimeError(
@@ -1210,13 +1151,11 @@ def cap_pairs_per_doc(
     unchanged.  Cost: one window shuffle over the doubled (directed)
     pair stream — pair-set-sized, never corpus-sized.
 
-    The direction doubling is an EXPLODE of a 2-struct array, NOT a
-    self-union: a union references the ``pairs`` plan subtree twice and
-    Spark executes it twice — measured at 2x wall on the prefix-filter
-    join whose capped rung this operator exists for (extended bench:
-    209.7 s self-union vs ~1x join cost after the explode rewrite).
-    The explode reads the pair stream once and generates both
-    directions row-locally."""
+    The direction doubling is :func:`graph.both_directions`, one
+    explode: a self-union executed the ``pairs`` subtree twice, 2x wall
+    on the prefix-filter join whose capped rung this operator exists
+    for (extended bench: 209.7 s self-union vs ~1x join cost after the
+    explode rewrite)."""
     if max_pairs_per_doc < 1:
         raise ValueError(
             f"max_pairs_per_doc must be >= 1, got {max_pairs_per_doc}"
@@ -1224,22 +1163,8 @@ def cap_pairs_per_doc(
     from pyspark.sql import Window as W
 
     carry = [c for c in pairs.columns if c not in (id_a, id_b)]
-    directed = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col(id_a).alias("_doc"), F.col(id_b).alias("_partner")
-                ),
-                F.struct(
-                    F.col(id_b).alias("_doc"), F.col(id_a).alias("_partner")
-                ),
-            )
-        ).alias("_dir"),
-        *carry,
-    ).select(
-        F.col("_dir._doc").alias("_doc"),
-        F.col("_dir._partner").alias("_partner"),
-        *carry,
+    directed = both_directions(
+        pairs, id_a, id_b, *carry, names=("_doc", "_partner")
     )
     rk = F.row_number().over(
         W.partitionBy("_doc").orderBy(F.desc(score_col), "_partner")

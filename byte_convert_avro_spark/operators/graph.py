@@ -1,5 +1,20 @@
-"""Graph algorithms beyond connected components (``dedup.py``): a
-deterministic fixed-round PageRank and degree-oriented triangle counting.
+"""Graph operators beyond connected components (``dedup.py``):
+
+- :func:`pagerank_fixed_rounds` — deterministic fixed-round PageRank
+- :func:`triangle_count`, :func:`triangle_counts_per_node`,
+  :func:`triangle_support_per_edge` — degree-oriented triangle counting
+  (whole graph, per node, per edge)
+- :func:`walk_to_root` — parent-pointer hierarchy walk
+- :func:`bfs_min_hops` — bounded min-hop reachability
+- :func:`bellman_ford_rounds` — bounded weighted shortest paths
+- :func:`neighborhood_kmv` — per-node KMV neighborhood sketches
+- :func:`label_propagation_rounds` — synchronous label propagation
+- :func:`k_core_peel` — fixed-round k-core peeling
+
+Two helpers hold the recurring idioms: :func:`both_directions` (each
+edge in both orientations from one evaluation of its subtree, also used
+by ``dedup.py`` and the query modules) and :func:`_oriented_adjacency`
+(the triangle operators' degree-oriented adjacency).
 
 The iterative-job discipline matches ``connected_components`` and
 ``kmeans_lloyd``: one shuffle-join + one grouped fold per round, lineage
@@ -19,6 +34,85 @@ from byte_convert_avro_spark.functions import (
     ordered_fold as _ordered_fold,
 )
 from byte_convert_avro_spark.plans.stats_reset import reset_plan_stats
+
+
+def both_directions(
+    df: DataFrame,
+    a: str,
+    b: str,
+    *carry: str,
+    names: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Each row of ``df`` twice, as ``(a, b)`` and as ``(b, a)``, each
+    followed by the ``carry`` columns unchanged -> columns ``names``
+    (default ``(a, b)``), then ``carry``.  The symmetric closure of a
+    pair list; filters, ``distinct`` and checkpoints stay with the
+    caller.
+
+    One row-local explode of a two-struct array, NOT a union with the
+    swapped self: a union's two branches each re-evaluate ``df``'s whole
+    subtree (for LSH candidates the shingle + minhash + band-join
+    pipeline, for the co-purchase graph the lineitem self-join) —
+    measured 2x the caller's cost at sf0.1 (r14).  The explode reads
+    every input row once.  Carry columns sit outside the struct, so
+    only the two swapped keys are packed and unpacked."""
+    na, nb = names or (a, b)
+    return df.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(na), F.col(b).alias(nb)),
+                F.struct(F.col(b).alias(na), F.col(a).alias(nb)),
+            )
+        ).alias("_dir"),
+        *carry,
+    ).select(F.col("_dir")[na].alias(na), F.col("_dir")[nb].alias(nb), *carry)
+
+
+def _oriented_adjacency(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The degree-oriented adjacency the triangle operators share ->
+    ``(e, deg, closed)``:
+
+    - ``e`` (a, b): the canonical edge set, ``a < b``, self-loops and
+      duplicates dropped, eagerly ``localCheckpoint``ed;
+    - ``deg`` (n, degree): every node's undirected degree;
+    - ``closed`` (v, u, nu, nv): every edge oriented u -> v from the
+      lower ``(degree, id)`` rank to the higher, with both endpoints'
+      out-neighbor arrays.  ``array_intersect(nu, nv)`` is exactly the
+      set of third corners w of the triangles whose lowest-rank edge
+      is (u, v), so every triangle appears once in ``closed``.
+
+    Inner joins build ``closed``: an endpoint with no out-neighbors
+    could only contribute an empty intersection."""
+    e = (
+        edges.select(
+            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+        )
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+        .localCheckpoint()
+    )
+    deg = (
+        e.select(F.col("a").alias("n"))
+        .unionAll(e.select(F.col("b").alias("n")))
+        .groupBy("n")
+        .agg(F.count("*").cast("long").alias("degree"))
+    )
+    da = deg.select(F.col("n").alias("a"), F.col("degree").alias("da"))
+    db = deg.select(F.col("n").alias("b"), F.col("degree").alias("db"))
+    ranked = e.join(da, "a").join(db, "b")
+    # orient low-rank -> high-rank; rank = (degree, id) lexicographic
+    lo_first = F.struct("da", "a") < F.struct("db", "b")
+    oriented = ranked.select(
+        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+    ).localCheckpoint()
+    adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
+    au = adj.select("u", F.col("nbrs").alias("nu"))
+    av = adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nv"))
+    closed = oriented.join(au, "u").join(av, "v")
+    return e, deg, closed
 
 
 def pagerank_fixed_rounds(
@@ -160,39 +254,9 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     global sum.  ``localCheckpoint`` truncates the edge DAG, which
     feeds four branches (measured 2x without).  Deterministic: rank
     ties broken by node id."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("d"))
-    )
-    da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
-    ranked = e.join(da, "a").join(db, "b")
-    # orient low-rank -> high-rank; rank = (degree, id) lexicographic
-    lo_first = F.struct("da", "a") < F.struct("db", "b")
-    oriented = ranked.select(
-        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint()
-    adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
-    au = adj.select("u", F.col("nbrs").alias("nu"))
-    av = adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nv"))
-    # inner joins are safe: an endpoint missing from adj has no
-    # out-neighbors, so its intersection could only contribute zero
-    tri = (
-        oriented.join(au, "u")
-        .join(av, "v")
-        .select(F.size(F.array_intersect("nu", "nv")).alias("k"))
-        .agg(F.coalesce(F.sum("k"), F.lit(0)).cast("long").alias("n_triangles"))
+    e, deg, closed = _oriented_adjacency(edges, src, dst)
+    tri = closed.select(F.size(F.array_intersect("nu", "nv")).alias("k")).agg(
+        F.coalesce(F.sum("k"), F.lit(0)).cast("long").alias("n_triangles")
     )
     counts = e.agg(F.count("*").cast("long").alias("n_edges")).crossJoin(
         deg.agg(F.count("*").cast("long").alias("n_nodes"))
@@ -510,22 +574,8 @@ def label_propagation_rounds(
     receive deg rows into a streaming count — ordinary agg skew."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    e0 = edges.select(F.col(src).alias("__a"), F.col(dst).alias("__b"))
-    # both orientations via row-local explode, not unionByName(self):
-    # the union re-evaluates the caller's edge subtree once per branch
-    # when the lazy checkpoint first materializes
     und = (
-        e0.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("__a"), F.col("__b")),
-                    F.struct(
-                        F.col("__b").alias("__a"), F.col("__a").alias("__b")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.__a", "_e.__b")
+        both_directions(edges, src, dst, names=("__a", "__b"))
         .filter(F.col("__a") != F.col("__b"))
         .distinct()
         .localCheckpoint(eager=False)
@@ -590,18 +640,8 @@ def k_core_peel(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # row-local explode, not unionByName(self) — see label_propagation
     und = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a"), F.col("b")),
-                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
+        both_directions(edges, src, dst, names=("a", "b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=False)
@@ -663,37 +703,9 @@ def triangle_counts_per_node(
     corners.  The explode is OUTPUT-bounded (3 rows per triangle),
     so per-node attribution costs exactly what the triangles weigh —
     never what the wedges would."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").cast("long").alias("degree"))
-    )
-    da = deg.select(F.col("n").alias("a"), F.col("degree").alias("da"))
-    db = deg.select(F.col("n").alias("b"), F.col("degree").alias("db"))
-    ranked = e.join(da, "a").join(db, "b")
-    lo_first = F.struct("da", "a") < F.struct("db", "b")
-    oriented = ranked.select(
-        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint()
-    adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
-    au = adj.select("u", F.col("nbrs").alias("nu"))
-    av = adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nv"))
-    tri = (
-        oriented.join(au, "u")
-        .join(av, "v")
-        .select(
-            "u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w")
-        )
+    _, deg, closed = _oriented_adjacency(edges, src, dst)
+    tri = closed.select(
+        "u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w")
     )
     corners = (
         tri.select(F.col("u").alias("n"))
@@ -726,37 +738,9 @@ def triangle_support_per_edge(
     triangle): each intersection member w of oriented edge (u, v)
     yields triangle {u, v, w}, credited to its three CANONICAL
     (min, max) edges."""
-    e = (
-        edges.select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").cast("long").alias("degree"))
-    )
-    da = deg.select(F.col("n").alias("a"), F.col("degree").alias("da"))
-    db = deg.select(F.col("n").alias("b"), F.col("degree").alias("db"))
-    ranked = e.join(da, "a").join(db, "b")
-    lo_first = F.struct("da", "a") < F.struct("db", "b")
-    oriented = ranked.select(
-        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint()
-    adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
-    au = adj.select("u", F.col("nbrs").alias("nu"))
-    av = adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nv"))
-    tri = (
-        oriented.join(au, "u")
-        .join(av, "v")
-        .select(
-            "u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w")
-        )
+    e, _, closed = _oriented_adjacency(edges, src, dst)
+    tri = closed.select(
+        "u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w")
     )
     sides = (
         tri.select(

@@ -1420,7 +1420,10 @@ def pagerank_trade_graph(spark: SparkSession, sf: str):
     round, lineage truncated)."""
     from pyspark.storagelevel import StorageLevel
 
-    from byte_convert_avro_spark.operators.graph import pagerank_fixed_rounds
+    from byte_convert_avro_spark.operators.graph import (
+        both_directions,
+        pagerank_fixed_rounds,
+    )
 
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
     l = t(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
@@ -1432,17 +1435,7 @@ def pagerank_trade_graph(spark: SparkSession, sf: str):
         )
         .distinct()
     )
-    # row-local explode, not union(self-swapped): the union's branches
-    # each re-evaluate the orders⋈lineitem distinct subtree, and
-    # pagerank references ``edges`` three more times during setup
-    edges = e0.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
+    edges = both_directions(e0, "src", "dst")
     # serialized checkpoint blocks: measured at sf10 (SCALE.md round-8)
     # this runs in a 12g local heap where deserialized needed 24g, and
     # FASTER (140.8s vs 272s) — smaller blocks beat re-deserialization.

@@ -257,7 +257,8 @@ def user_rolling_7d_median_value(spark: SparkSession, sf: str):
     explicit, bounded price of EXACT moving quantiles; the sketch
     alternative (approx_percentile per window) trades it away when
     error is acceptable.  A/B vs the old join spelling on a seeded
-    hot-user corpus: tools/skew_stress.py (SCALE.md round-11 entry).
+    hot-user corpus: BENCH_r11_skew_ab.json (SCALE.md round-11 entry;
+    runner: ``git show 13c4ca0:tools/skew_stress.py``).
     """
     ev = (
         t(spark, sf, "events")

@@ -398,7 +398,10 @@ def trade_cheapest_cost_3rounds(spark: SparkSession, sf: str):
     is degree^rounds paths); per round one equi-join + one
     map-side-partial MIN.  Parallel edges collapse to their min weight
     BEFORE the walk — one edge per pair, the graph's true size."""
-    from byte_convert_avro_spark.operators.graph import bellman_ford_rounds
+    from byte_convert_avro_spark.operators.graph import (
+        bellman_ford_rounds,
+        both_directions,
+    )
 
     dir_e = (
         t(spark, sf, "lineitem")
@@ -413,18 +416,7 @@ def trade_cheapest_cost_3rounds(spark: SparkSession, sf: str):
         )
         .agg(F.min(cents("l_extendedprice")).alias("w"))
     )
-    # row-local explode, not unionByName(self-swapped) — one evaluation
-    # of the weighted-edge aggregation for both orientations
-    und = dir_e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a"), F.col("b"), F.col("w")),
-                F.struct(
-                    F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-                ),
-            )
-        ).alias("_e")
-    ).select("_e.a", "_e.b", "_e.w")
+    und = both_directions(dir_e, "a", "b", "w")
     seeds = (
         t(spark, sf, "customer")
         .filter(F.col("c_nationkey") == 1)
@@ -534,7 +526,10 @@ def trade_neighborhood_function_kmv(spark: SparkSession, sf: str):
 
 
 def _neighborhood_kmv_with_referee(spark: SparkSession, sf: str, sample_mod: int):
-    from byte_convert_avro_spark.operators.graph import neighborhood_kmv
+    from byte_convert_avro_spark.operators.graph import (
+        both_directions,
+        neighborhood_kmv,
+    )
 
     dir_e = (
         t(spark, sf, "lineitem")
@@ -549,23 +544,11 @@ def _neighborhood_kmv_with_referee(spark: SparkSession, sf: str, sample_mod: int
         )
         .distinct()
     )
-    # row-local explode, not unionByName(self-swapped) — see above
     # Lazily checkpointed (r15): besides the sketch operator (which
     # persists its own copy), the edge frame feeds the referee's node
     # seed and BOTH reach-expansion rounds — without the checkpoint
     # each of those re-ran the orders⋈lineitem join + distinct.
-    und = (
-        dir_e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a"), F.col("b")),
-                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
-        .localCheckpoint(eager=False)
-    )
+    und = both_directions(dir_e, "a", "b").localCheckpoint(eager=False)
     sk = neighborhood_kmv(und, k=16, rounds=2, node="node", src="a", dst="b")
 
     # exact pair frames (gate-side verification only — see docstring)

@@ -1896,6 +1896,7 @@ def copurchase_lpa_modularity(spark: SparkSession, sf: str):
     only two degree/label decorations and one label-equality edge join
     — all equi-keyed; nothing beyond |edges| appears anywhere."""
     from byte_convert_avro_spark.operators.graph import (
+        both_directions,
         label_propagation_rounds,
     )
 
@@ -1914,15 +1915,7 @@ def copurchase_lpa_modularity(spark: SparkSession, sf: str):
         dir_e.select(F.col("a").alias("src"), F.col("b").alias("dst")),
         rounds=3,
     )
-    # row-local explode, not unionByName(self-swapped)
-    e = dir_e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a"), F.col("b")),
-                F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-            )
-        ).alias("_e")
-    ).select("_e.a", "_e.b")
+    e = both_directions(dir_e, "a", "b")
     deg = e.groupBy(F.col("a").alias("n")).agg(
         F.count("*").cast("long").alias("d")
     )

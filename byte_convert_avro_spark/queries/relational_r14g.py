@@ -1951,6 +1951,8 @@ def corpus_textrank_keywords(spark: SparkSession, sf: str):
     bounded_ordered_agg, as in the HITS entry).  Top-15 by (TR desc,
     token).  Scale: the graph lives on the bigram vocabulary, never
     occurrences; rounds never touch raw text again."""
+    from byte_convert_avro_spark.operators.graph import both_directions
+
     docs = t(spark, sf, "documents")
     words = docs.select("doc_id", F.split("text", " ").alias("w"))
     bg = (
@@ -1964,16 +1966,7 @@ def corpus_textrank_keywords(spark: SparkSession, sf: str):
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .filter((F.col("a") != F.col("b")) & (F.col("a") != "") & (F.col("b") != ""))
     )
-    # row-local explode, not unionAll(self-swapped) — one evaluation of
-    # the corpus-wide bigram explode for both orientations
-    sym = bg.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-                F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-            )
-        ).alias("_e")
-    ).select("_e.u", "_e.v")
+    sym = both_directions(bg, "a", "b", names=("u", "v"))
     e = sym.groupBy("u", "v").agg(F.count("*").cast("long").alias("w"))
     st = e.groupBy("u").agg(
         F.sum("w").cast("long").alias("s"),

@@ -321,7 +321,7 @@ def trade_reachability_3hop(spark: SparkSession, sf: str):
     integer-encoding discipline).  Hop 0 counts every seed customer
     including order-less ones; the bipartite graph means odd hops reach
     suppliers and even hops customers."""
-    from byte_convert_avro_spark.operators.graph import bfs_min_hops
+    from byte_convert_avro_spark.operators.graph import bfs_min_hops, both_directions
 
     li = (
         t(spark, sf, "lineitem")
@@ -336,17 +336,7 @@ def trade_reachability_3hop(spark: SparkSession, sf: str):
         )
         .distinct()
     )
-    # row-local explode, not unionByName(self-swapped): each BFS round
-    # re-evaluates ``und``, and the union form doubled the
-    # orders⋈lineitem distinct subtree inside every round
-    und = li.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a"), F.col("b")),
-                F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-            )
-        ).alias("_e")
-    ).select("_e.a", "_e.b")
+    und = both_directions(li, "a", "b")
     seeds = (
         t(spark, sf, "customer")
         .filter(F.col("c_nationkey") == 1)

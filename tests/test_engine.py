@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 
 from byte_convert_avro_spark import worker_env
 from byte_convert_avro_spark.avro import schemaless_encode
-from byte_convert_avro_spark.decoder import FAILFAST
+from byte_convert_avro_spark.decoder import FAILFAST, make_decode_udf
 from byte_convert_avro_spark.engine import Engine, EngineConfig, parse_topics
 from byte_convert_avro_spark.schema_store import LocalSchemaStore, SchemaLookupError
 from byte_convert_avro_spark.wire import encode_wire
@@ -156,6 +156,15 @@ def test_parse_topics_ok():
 def test_parse_topics_rejects(bad):
     with pytest.raises(ValueError):
         parse_topics(bad)
+
+
+@pytest.mark.parametrize("mode", ["permissive", "FAIL_FAST", "DROPMALFORMED", ""])
+def test_decode_mode_rejects_unknown(mode):
+    """An unknown mode must not fall through to PERMISSIVE's catch-all
+    (which would swallow every decode error); the message names both
+    accepted values."""
+    with pytest.raises(ValueError, match="'PERMISSIVE' or 'FAILFAST'"):
+        make_decode_udf(LocalSchemaStore(), {"t": True}, mode=mode)
 
 
 def test_local_store_lookup_error():

@@ -839,8 +839,13 @@ def test_kmeans_minibatch_rejects_bad_mod(spark):
 def test_triangle_count_hand_graph(spark):
     """K4 on {1,2,3,4} (4 triangles) + a pendant node + noise the
     canonicalizer must handle: duplicate edges, reversed orientation,
-    a self-loop."""
-    from byte_convert_avro_spark.operators.graph import triangle_count
+    a self-loop.  The per-node and per-edge operators share the
+    oriented adjacency, so the same graph pins them too."""
+    from byte_convert_avro_spark.operators.graph import (
+        triangle_count,
+        triangle_counts_per_node,
+        triangle_support_per_edge,
+    )
 
     edges = [
         (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),  # K4
@@ -852,6 +857,17 @@ def test_triangle_count_hand_graph(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     r = triangle_count(df, "src", "dst").collect()[0]
     assert (r.n_nodes, r.n_edges, r.n_triangles) == (5, 7, 4)
+    per_node = {
+        r.n: (r.degree, r.triangles)
+        for r in triangle_counts_per_node(df, "src", "dst").collect()
+    }
+    assert per_node == {1: (3, 3), 2: (3, 3), 3: (3, 3), 4: (4, 3), 5: (1, 0)}
+    support = {
+        (r.a, r.b): r.support
+        for r in triangle_support_per_edge(df, "src", "dst").collect()
+    }
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    assert support == {**{e: 2 for e in k4}, (4, 5): 0}
 
 
 def test_triangle_count_star_has_none(spark):

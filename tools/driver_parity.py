@@ -37,12 +37,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
 #: queries whose gate intentionally bounds its own verification work;
 #: copied into the artifact for every run that includes them — the
 #: "no silent caps" rule made machine-readable (r12 ADVICE).
@@ -155,6 +149,8 @@ def main() -> int:
     sys.path.insert(0, REPO)
     import duckdb
     from pyspark.sql import SparkSession
+
+    from byte_convert_avro_spark.session import TABLES
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
