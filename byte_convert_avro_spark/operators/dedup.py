@@ -866,7 +866,6 @@ def _prefix_candidate_join(
     tok_col: str,
     extra_filter,
     alpha_sql: str,
-    local_verify: bool = True,
 ) -> DataFrame:
     """Shared candidate stage of the prefix-filter joins (r15): explode
     each side's prefix (carrying the full rank-ordered array), equi-join
@@ -891,30 +890,21 @@ def _prefix_candidate_join(
     join, verification is row-local ``array_intersect`` right here —
     no pair-keyed verify joins, no re-shuffle of corpus token streams.
     ``alpha_sql`` is the minimum-required-overlap expression over
-    ``_sa``/``_sb``; ``extra_filter`` the family's length filter.
-
-    ``local_verify=False`` drops the full-array carry (prefixes still
-    ride for the witness rule) and returns bare ``(id_a, id_b, _sa,
-    _sb)`` candidates for a join-based verify — the profile for
-    corpora of very LONG documents, where copying each doc's whole
-    array onto every one of its ~(1-t)·s prefix rows (Θ(s²) bytes/doc
-    into the candidate exchange) would outweigh moving arrays once per
-    candidate pair."""
-    a_cols = [
+    ``_sa``/``_sb``; ``extra_filter`` the family's length filter."""
+    pa = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("_s").alias("_sa"),
         F.col("_pre").alias("_prea"),
-    ]
-    b_cols = [
+        F.col("_arr").alias("_arra"),
+        F.posexplode("_pre").alias("_pa0", tok_col),
+    )
+    pb = docs.select(
         F.col(id_col).alias("id_b"),
         F.col("_s").alias("_sb"),
         F.col("_pre").alias("_preb"),
-    ]
-    if local_verify:
-        a_cols.append(F.col("_arr").alias("_arra"))
-        b_cols.append(F.col("_arr").alias("_arrb"))
-    pa = docs.select(*a_cols, F.posexplode("_pre").alias("_pa0", tok_col))
-    pb = docs.select(*b_cols, F.posexplode("_pre").alias("_pb0", tok_col))
+        F.col("_arr").alias("_arrb"),
+        F.posexplode("_pre").alias("_pb0", tok_col),
+    )
     alpha = F.expr(alpha_sql)
     cand = pa.join(pb, tok_col).filter(
         (F.col("id_a") < F.col("id_b"))
@@ -937,8 +927,6 @@ def _prefix_candidate_join(
             == F.col(tok_col)
         )
     )
-    if not local_verify:
-        return cand.select("id_a", "id_b", "_sa", "_sb")
     return cand.select(
         "id_a",
         "id_b",
@@ -954,7 +942,6 @@ def prefix_filter_jaccard(
     tok_col: str = "token",
     t_num: int = 3,
     t_den: int = 5,
-    verify: str = "join",
 ) -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (the
     AllPairs/PPJoin family, Bayardo et al. WWW'07): every unordered doc
@@ -987,37 +974,29 @@ def prefix_filter_jaccard(
     prefixes, and the MIN-RANK-WITNESS rule (see
     ``_prefix_candidate_join``) emits every candidate pair exactly
     once — the pre-r15 pair-keyed ``distinct()`` over ~7 witness
-    rows/pair is gone.  Verify strategies, identical output:
-
-    - ``verify="join"`` (default): row-LOCAL — both endpoints' full
-      arrays ride the prefix rows, overlap = size(array_intersect) in
-      the candidate join itself; zero post-candidate shuffles.  The
-      per-doc byte cost is Θ(s·plen) into the candidate exchange —
-      the right trade whenever candidate fan-out rivals or exceeds
-      corpus size (replicated corpora, the regime this operator
-      targets); the pre-r15 pair-keyed verify re-shuffled the token
-      stream per candidate ENDPOINT (Θ(s) bytes × pair fan-out) plus
-      a |pairs × shared-tokens| groupBy.
-    - ``verify="arrays"``: bare candidates, then each side's array
-      attaches by an equi join against the SAME checkpointed doc
-      frame (no recompute) — overlap still row-local; for long-doc
-      corpora where Θ(s²)/doc through the candidate exchange is the
-      expensive side.
+    rows/pair is gone.  The verify is row-LOCAL: both endpoints' full
+    arrays ride the prefix rows, overlap = size(array_intersect) in the
+    candidate join itself; zero post-candidate shuffles.  The per-doc
+    byte cost is Θ(s·plen) into the candidate exchange — the right
+    trade whenever candidate fan-out rivals or exceeds corpus size
+    (replicated corpora, the regime this operator targets); the pre-r15
+    pair-keyed verify re-shuffled the token stream per candidate
+    ENDPOINT (Θ(s) bytes × pair fan-out) plus a |pairs × shared-tokens|
+    groupBy.
 
     Measured at sf0.1 (7.1M qualifying pairs, 31-token vocab, ~3.7k
     mean prefix df — the worst case for witness duplication): the
     benched pairs query fell 122.0 -> 24.7 s (median-of-3, equal host
-    spin) with the r15 row-local default; an isolated interleaved A/B
-    of the two verify flavors is a wash (11.5 vs 10.8-11.6 s) — the
-    win is the dead distinct exchange + dead verify joins + the
-    single-eval checkpoint, not the verify flavor.
+    spin) with the r15 row-local verify.  Attaching each side's array
+    by an equi join after the candidate join instead measured a wash in
+    an interleaved A/B (11.5 vs 10.8-11.6 s) — the win is the dead
+    distinct exchange + dead verify joins + the single-eval checkpoint,
+    not the verify flavor.
 
     Empty-string tokens count as members (both engines split '' to
     [''] — the shared convention)."""
     if not (0 < t_num <= t_den):
         raise ValueError(f"need 0 < t_num <= t_den, got {t_num}/{t_den}")
-    if verify not in ("arrays", "join"):
-        raise ValueError(f"verify must be 'arrays' or 'join', got {verify!r}")
     # prefix length = s - ceil(t*s) + 1; ceil via integer floor-div
     # ((a + b - 1) div b) so the arithmetic is exact at any magnitude
     # (double division + cast would only truncate exactly below 2^52).
@@ -1040,31 +1019,7 @@ def prefix_filter_jaccard(
         f"({t_num}L * (_sa + _sb) + {t_num + t_den - 1}L)"
         f" div {t_num + t_den}L"
     )
-    if verify == "join":
-        inter = _prefix_candidate_join(
-            docs, id_col, tok_col, length_ok, alpha_sql, local_verify=True
-        )
-    else:
-        cand = _prefix_candidate_join(
-            docs, id_col, tok_col, length_ok, alpha_sql, local_verify=False
-        )
-        inter = (
-            cand.join(
-                docs.select(F.col(id_col).alias("id_a"), F.col("_arr").alias("_tka")),
-                "id_a",
-            )
-            .join(
-                docs.select(F.col(id_col).alias("id_b"), F.col("_arr").alias("_tkb")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                "_sa",
-                "_sb",
-                F.size(F.array_intersect("_tka", "_tkb")).alias("inter_sz"),
-            )
-        )
+    inter = _prefix_candidate_join(docs, id_col, tok_col, length_ok, alpha_sql)
     union = F.col("_sa") + F.col("_sb") - F.col("inter_sz")
     return (
         inter.filter(
@@ -1117,9 +1072,7 @@ def overlap_join(
     # both sets must be at least c tokens; alpha (the required overlap)
     # is the constant c
     length_ok = (F.col("_sa") >= c) & (F.col("_sb") >= c)
-    inter = _prefix_candidate_join(
-        docs, id_col, tok_col, length_ok, f"{c}L", local_verify=True
-    )
+    inter = _prefix_candidate_join(docs, id_col, tok_col, length_ok, f"{c}L")
     return inter.filter(F.col("inter_sz") >= c).select(
         "id_a",
         "id_b",

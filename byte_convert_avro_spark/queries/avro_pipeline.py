@@ -108,7 +108,7 @@ def streaming_decode_customers(spark: SparkSession, sf: str):
 
     from byte_convert_avro_spark.streaming import (
         decode_stream,
-        run_stream_to_memory,
+        drain_to_memory,
         stream_records,
     )
 
@@ -118,15 +118,8 @@ def streaming_decode_customers(spark: SparkSession, sf: str):
     src = scratch_dir("stream_decode_")
     records.write.mode("overwrite").parquet(src)
 
-    decoded = decode_stream(
-        eng, stream_records(spark, src)
-    )
-    q, table = run_stream_to_memory(decoded)
-    try:
-        spark.table(table).count()  # force materialization before parse
-    finally:
-        q.stop()
-    env = spark.table(table).select(
+    decoded = decode_stream(eng, stream_records(spark, src))
+    env = drain_to_memory(decoded).select(
         F.from_json(F.col("value").cast("string"), "struct<originMessage:string>")[
             "originMessage"
         ].alias("msg")

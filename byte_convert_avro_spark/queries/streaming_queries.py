@@ -11,6 +11,14 @@ equality IS the correctness statement.
 (The append-mode/watermark/late-data behaviors that can't equal a batch
 oracle by construction are pinned in ``tests/test_streaming.py`` instead.)
 
+Two helpers carry the harness: ``streaming.drain_to_memory`` runs a
+finite stream to a memory sink, stops it and returns the table, and
+``replay_shards`` replays ordered one-file shards one per trigger
+(``maxFilesPerTrigger=1``) and removes them afterwards; ``hash_shards``
+makes the four content-hashed shards most of them replay.  The
+``foreachBatch`` OCF sink (``streaming_ocf_sink_daily_totals``) is the
+one query that drives its own sink.
+
 Scale notes: these plans are the production shape — watermark-less only
 because the oracle needs every window; a deployment adds
 ``withWatermark`` (see ``streaming/windows.py``) and swaps the memory
@@ -20,7 +28,8 @@ sink for Kafka/Delta.  State is per (window × event_type): tiny.
 from __future__ import annotations
 
 import os
-import uuid
+import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +43,7 @@ from byte_convert_avro_spark.queries.base import (
     scratch_dir,
     t,
 )
+from byte_convert_avro_spark.streaming.pipeline import drain_to_memory
 
 US_PER_HOUR = 3_600_000_000
 
@@ -43,10 +53,9 @@ def write_ordered_shards(frames, prefix: str) -> str:
     strictly increasing modification times — the deterministic
     micro-batch harness shared by every multi-trigger streaming query
     (file sources batch by mtime; ``maxFilesPerTrigger=1`` then replays
-    the shards in exactly this order).  Caller removes the directory."""
+    the shards in exactly this order).  Caller removes the directory;
+    ``replay_shards`` does both."""
     import glob
-    import os
-    import shutil
     import tempfile
 
     d = tempfile.mkdtemp(prefix=prefix)
@@ -59,6 +68,30 @@ def write_ordered_shards(frames, prefix: str) -> str:
         shutil.rmtree(tmp)
         os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
     return d
+
+
+@contextmanager
+def replay_shards(spark: SparkSession, frames, schema, prefix: str):
+    """Write ``frames`` as ordered one-file shards, yield the stream that
+    replays them one file per trigger (``maxFilesPerTrigger=1``), and
+    remove the shard directory on exit."""
+    d = write_ordered_shards(frames, prefix)
+    try:
+        yield (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(d)
+        )
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def hash_shards(df: DataFrame, key: str) -> list[DataFrame]:
+    """``df`` split into four shards by ``hash_bucket(key, 4)`` — every
+    row in exactly one shard, each shard a genuine micro-batch under
+    ``replay_shards``."""
+    b = hash_bucket(key, 4).cast("int")
+    return [df.filter(b == i) for i in range(4)]
 
 
 def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
@@ -93,16 +126,6 @@ def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _run_complete(agg: DataFrame) -> DataFrame:
-    name = f"stream_{uuid.uuid4().hex[:12]}"
-    q = agg.writeStream.format("memory").queryName(name).outputMode("complete").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return agg.sparkSession.table(name)
-
-
 # ---------------------------------------------------------------------------
 @register(
     "streaming_hourly_tumbling",
@@ -131,7 +154,7 @@ def streaming_hourly_tumbling(spark: SparkSession, sf: str):
             "total_value",
         )
     )
-    return _run_complete(agg)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -158,7 +181,7 @@ def streaming_sliding_counts(spark: SparkSession, sf: str):
             "n_events",
         )
     )
-    return _run_complete(agg)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -204,7 +227,7 @@ def streaming_session_windows(spark: SparkSession, sf: str):
             "user_id", "session_start_us", "session_end_us", "n_events", "session_value"
         )
     )
-    return _run_complete(agg)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -226,16 +249,14 @@ def streaming_dedup_events(spark: SparkSession, sf: str):
     the ORIGINAL table exactly, which is only true if the streaming state
     dropped every duplicate and nothing else.  Duplicates are exact
     copies, so which copy survives cannot affect the hash."""
-    from byte_convert_avro_spark.streaming import dedup_stream, run_stream_to_memory
+    from byte_convert_avro_spark.streaming import dedup_stream
 
     # two independent source instances of the same file = every record
     # arrives twice; dedup_stream's with_event_time overwrites the ts_ts
     # column _events_stream already added, so reuse is safe
     doubled = _events_stream(spark, sf).union(_events_stream(spark, sf))
     dd = dedup_stream(doubled, "event_id", watermark="90 days")
-    q, name = run_stream_to_memory(dd, output_mode="append")
-    q.stop()
-    return spark.table(name).agg(
+    return drain_to_memory(dd).agg(
         F.count("*").alias("n_unique"),
         F.countDistinct("user_id").alias("n_users"),
         dsum("value").alias("total_value"),
@@ -295,8 +316,6 @@ def streaming_late_data_watermark(spark: SparkSession, sf: str):
     evict, one-batch filter lag neutralized by the pinned equal-max
     shard) were pinned empirically; tests/test_streaming.py asserts a
     named late row is excluded."""
-    import shutil
-
     ev = t(spark, sf, "events")
     slot = hash_bucket("event_id", 48).cast("int")
     shaped = ev.select("event_id", F.col("value").alias("value"), slot.alias("slot"))
@@ -334,16 +353,12 @@ def streaming_late_data_watermark(spark: SparkSession, sf: str):
         shaped.filter(block == 3),
         shaped.filter(block == 5),
     ]
-    d = write_ordered_shards(
+    with replay_shards(
+        spark,
         [sh.select("event_id", "value", "ts_us") for sh in shards],
+        "event_id long, value double, ts_us long",
         "late_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema("event_id long, value double, ts_us long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    ) as stream:
         agg = (
             stream.withColumn("ts_ts", F.timestamp_micros("ts_us"))
             .withWatermark("ts_ts", "12 hours")
@@ -355,20 +370,7 @@ def streaming_late_data_watermark(spark: SparkSession, sf: str):
                 "total_value",
             )
         )
-        name = f"stream_{uuid.uuid4().hex[:12]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return drain_to_memory(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -436,11 +438,7 @@ def streaming_view_purchase_join(spark: SparkSession, sf: str):
         "purchase_ts_us",
         (F.col("purchase_ts_us") - F.col("view_ts_us")).alias("gap_us"),
     )
-    from byte_convert_avro_spark.streaming import run_stream_to_memory
-
-    q, name = run_stream_to_memory(j, output_mode="append")
-    q.stop()
-    return spark.table(name)
+    return drain_to_memory(j)
 
 
 # ---------------------------------------------------------------------------
@@ -496,11 +494,7 @@ def streaming_static_user_enrichment(spark: SparkSession, sf: str):
             "lifetime_events", "lifetime_cents",
         )
     )
-    from byte_convert_avro_spark.streaming import run_stream_to_memory
-
-    q, name = run_stream_to_memory(j, output_mode="append")
-    q.stop()
-    return spark.table(name)
+    return drain_to_memory(j)
 
 
 # ---------------------------------------------------------------------------
@@ -528,30 +522,13 @@ def streaming_stateful_user_totals(spark: SparkSession, sf: str):
     the batches sliced.  The last row is selected with max(struct(...)) —
     n_events strictly increases per emission, so the struct max IS the
     final state."""
-    import shutil
+    from byte_convert_avro_spark.streaming import running_user_totals
 
     ev = t(spark, sf, "events")
-    shard = hash_bucket("event_id", 4).cast("int")
-    raw = ev.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "stateful_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-        from byte_convert_avro_spark.streaming import (
-            running_user_totals,
-            run_stream_to_memory,
-        )
-
-        totals = running_user_totals(stream)
-        q, name = run_stream_to_memory(totals, output_mode="update")
-        q.stop()
-        emitted = spark.table(name)
+    with replay_shards(
+        spark, hash_shards(ev, "event_id"), ev.schema, "stateful_shards_"
+    ) as stream:
+        emitted = drain_to_memory(running_user_totals(stream), "update")
         final = F.max(
             F.struct("n_events", "total_cents", "first_ts_us", "last_ts_us")
         ).alias("_f")
@@ -566,8 +543,6 @@ def streaming_stateful_user_totals(spark: SparkSession, sf: str):
                 F.col("_f.last_ts_us").alias("last_ts_us"),
             )
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -596,9 +571,6 @@ def streaming_ocf_sink_daily_totals(spark: SparkSession, sf: str):
     latest-wins compaction in one pipeline.  Scale: each micro-batch
     writes only its CHANGED groups (update mode), files are
     per-partition, compaction is one struct-argmax groupBy."""
-    import os
-    import tempfile
-
     from byte_convert_avro_spark.sources.avro_ocf import (
         read_avro_ocf,
         write_avro_ocf,
@@ -650,18 +622,19 @@ def streaming_ocf_sink_daily_totals(spark: SparkSession, sf: str):
     )
 
 
-
+@contextmanager
 def _two_sided_sentinel_streams(spark, sf: str, prefix: str):
     """Shared harness for the outer stream-stream joins: split events
     into view/purchase sides, append THREE far-future flush sentinels
     per side (watermark updates from batch N apply to batch N+1, and
     outer-row eviction lags one more batch — the third sentinel
     guarantees a batch that RUNS with the watermark already past every
-    real row's match window), write each side as ordered one-file
-    shards, and return (views_stream, purchases_stream, cleanup_paths).
-    Both streams carry a 1-minute watermark; sentinel rows are user -1
-    and must be filtered from the DRAINED table (never inside the
-    streaming plan — a pre-watermark filter freezes the watermark)."""
+    real row's match window), replay each side as ordered one-file
+    shards, and yield (views_stream, purchases_stream); both shard
+    directories go on exit.  Both streams carry a 1-minute watermark;
+    sentinel rows are user -1 and must be filtered from the DRAINED
+    table (never inside the streaming plan — a pre-watermark filter
+    freezes the watermark)."""
     ev = events_ts_to_ns(t(spark, sf, "events"))
     shaped = ev.select(
         "event_id", "user_id", F.expr("ts DIV 1000").alias("ts_us"), "event_type"
@@ -674,33 +647,25 @@ def _two_sided_sentinel_streams(spark, sf: str, prefix: str):
         (-3, -1, max_us + 180 * day_us),
     ]
 
-    def write_side(etype: str) -> str:
-        side = shaped.filter(F.col("event_type") == etype).select(
+    schema = "event_id long, user_id long, ts_us long"
+
+    def side(etype: str):
+        real = shaped.filter(F.col("event_type") == etype).select(
             "event_id", "user_id", "ts_us"
         )
-        frames = [side] + [
-            spark.createDataFrame([x], "event_id long, user_id long, ts_us long")
-            for x in sent
-        ]
-        return write_ordered_shards(frames, f"{prefix}{etype}_")
+        frames = [real] + [spark.createDataFrame([x], schema) for x in sent]
+        return replay_shards(spark, frames, schema, f"{prefix}{etype}_")
 
-    def read_side(d: str, pfx: str):
-        return (
-            spark.readStream.schema("event_id long, user_id long, ts_us long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-            .select(
-                F.col("event_id").alias(f"{pfx}_id"),
-                F.col("user_id").alias(f"{pfx}_user"),
-                F.col("ts_us").alias(f"{pfx}_ts_us"),
-                F.timestamp_micros("ts_us").alias(f"{pfx}_time"),
-            )
-            .withWatermark(f"{pfx}_time", "1 minute")
-        )
+    def watermarked(stream, pfx: str):
+        return stream.select(
+            F.col("event_id").alias(f"{pfx}_id"),
+            F.col("user_id").alias(f"{pfx}_user"),
+            F.col("ts_us").alias(f"{pfx}_ts_us"),
+            F.timestamp_micros("ts_us").alias(f"{pfx}_time"),
+        ).withWatermark(f"{pfx}_time", "1 minute")
 
-    dv = write_side("view")
-    dp = write_side("purchase")
-    return read_side(dv, "v"), read_side(dp, "p"), [dv, dp]
+    with side("view") as views, side("purchase") as purchases:
+        yield watermarked(views, "v"), watermarked(purchases, "p")
 
 
 # ---------------------------------------------------------------------------
@@ -732,8 +697,6 @@ def streaming_ocf_evolution_read(spark: SparkSession, sf: str):
     Scale: one binaryFile task per arriving file; resolution compiles
     once per file, schema-sized."""
     import json
-    import os
-    import tempfile
 
     from byte_convert_avro_spark.sources.avro_ocf import (
         read_avro_ocf,
@@ -773,7 +736,7 @@ def streaming_ocf_evolution_read(spark: SparkSession, sf: str):
         .cast("long")
         .alias("balance_e2"),
     )
-    return _run_complete(agg)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -811,13 +774,7 @@ def streaming_append_closed_windows(spark: SparkSession, sf: str):
             "n_events",
         )
     )
-    name = f"stream_{uuid.uuid4().hex[:12]}"
-    q = agg.writeStream.format("memory").queryName(name).outputMode("append").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return agg.sparkSession.table(name)
+    return drain_to_memory(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -856,10 +813,7 @@ def streaming_left_outer_view_purchase(spark: SparkSession, sf: str):
     event-time range bounds both sides' buffered state to the window +
     delay, and outer emission is precisely the eviction moment — state
     cannot grow past watermark horizon BY CONSTRUCTION."""
-    import shutil
-
-    views, purch, paths = _two_sided_sentinel_streams(spark, sf, "lo_")
-    try:
+    with _two_sided_sentinel_streams(spark, sf, "lo_") as (views, purch):
         j = views.join(
             purch,
             (F.col("p_user") == F.col("v_user"))
@@ -874,14 +828,7 @@ def streaming_left_outer_view_purchase(spark: SparkSession, sf: str):
             F.col("p_ts_us").alias("purchase_ts_us"),
             (F.col("p_ts_us") - F.col("v_ts_us")).alias("gap_us"),
         )
-        from byte_convert_avro_spark.streaming import run_stream_to_memory
-
-        q, name = run_stream_to_memory(j, output_mode="append")
-        q.stop()
-        return spark.table(name).filter(F.col("user_id") >= 0)
-    finally:
-        for d in paths:
-            shutil.rmtree(d, ignore_errors=True)
+        return drain_to_memory(j).filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -913,10 +860,6 @@ def streaming_chained_quarter_to_hour(spark: SparkSession, sf: str):
     level-2 (hour x type) — both bounded by watermark eviction; this is
     the production cascade that cuts sink volume 4x without a second
     job."""
-    import shutil
-
-    from byte_convert_avro_spark.streaming import run_stream_to_memory
-
     ev = t(spark, sf, "events")
     flush_ns = 4_000_000_000 * 1_000_000_000  # ~2096: past every real event
     # build the sentinel BY COLUMN NAME — a positional tuple silently
@@ -933,13 +876,9 @@ def streaming_chained_quarter_to_hour(spark: SparkSession, sf: str):
     # advanced by the flush batch evicts BOTH levels before the query
     # reports idle — the one-batch eviction lag does not compound into
     # missing output here.
-    d = write_ordered_shards([ev, sentinel], "chained_agg_")
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, [ev, sentinel], ev.schema, "chained_agg_"
+    ) as stream:
         s = stream.withColumn(
             "ts_ts", F.timestamp_micros(F.expr("ts DIV 1000"))
         ).withWatermark("ts_ts", "10 minutes")
@@ -958,11 +897,7 @@ def streaming_chained_quarter_to_hour(spark: SparkSession, sf: str):
             F.col("n_events").cast("long").alias("n_events"),
             F.col("n_quarters_active").cast("long").alias("n_quarters_active"),
         )
-        q, name = run_stream_to_memory(out, output_mode="append")
-        q.stop()
-        return spark.table(name).filter(F.col("event_type") != "flush")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return drain_to_memory(out).filter(F.col("event_type") != "flush")
 
 
 # ---------------------------------------------------------------------------
@@ -1005,7 +940,7 @@ def streaming_top5_users_complete(spark: SparkSession, sf: str):
         .orderBy(F.desc("total_cents"), "user_id")
         .limit(5)
     )
-    return _run_complete(agg)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1041,10 +976,7 @@ def streaming_full_outer_view_purchase(spark: SparkSession, sf: str):
     batch FULL JOIN.  Scale notes: state on both sides is bounded by
     the match window + watermark delay BY CONSTRUCTION — outer emission
     IS eviction, on both sides."""
-    import shutil
-
-    views, purch, paths = _two_sided_sentinel_streams(spark, sf, "fo_")
-    try:
+    with _two_sided_sentinel_streams(spark, sf, "fo_") as (views, purch):
         j = views.join(
             purch,
             (F.col("p_user") == F.col("v_user"))
@@ -1060,17 +992,10 @@ def streaming_full_outer_view_purchase(spark: SparkSession, sf: str):
             F.col("p_ts_us").alias("purchase_ts_us"),
             (F.col("p_ts_us") - F.col("v_ts_us")).alias("gap_us"),
         )
-        from byte_convert_avro_spark.streaming import run_stream_to_memory
-
-        q, name = run_stream_to_memory(j, output_mode="append")
-        q.stop()
-        return spark.table(name).filter(
+        return drain_to_memory(j).filter(
             (F.coalesce("view_user", F.lit(0)) >= 0)
             & (F.coalesce("purchase_user", F.lit(0)) >= 0)
         )
-    finally:
-        for d in paths:
-            shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1140,7 +1065,7 @@ def streaming_session_window_dynamic_gap(spark: SparkSession, sf: str):
             "session_value",
         )
     )
-    return _run_complete(agg)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1197,31 +1122,14 @@ def streaming_rank_sketch_event_values(spark: SparkSession, sf: str):
     O(k) per group FOREVER — the streaming-percentile-monitoring shape
     (a dashboard polls the latest emission) with none of the unbounded
     state a naive running-percentile would carry."""
-    import shutil
-
-    from byte_convert_avro_spark.streaming import (
-        run_stream_to_memory,
-        streaming_rank_sketch,
-    )
+    from byte_convert_avro_spark.streaming import streaming_rank_sketch
     from byte_convert_avro_spark.operators.sketch import rank_sketch_quantile
 
     ev = t(spark, sf, "events")
-    shard = hash_bucket("event_id", 4).cast("int")
-    raw = ev.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "rank_sketch_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-        sk = streaming_rank_sketch(stream)
-        q, name = run_stream_to_memory(sk, output_mode="update")
-        q.stop()
-        emitted = spark.table(name)
+    with replay_shards(
+        spark, hash_shards(ev, "event_id"), ev.schema, "rank_sketch_shards_"
+    ) as stream:
+        emitted = drain_to_memory(streaming_rank_sketch(stream), "update")
         final = F.max(F.struct("n_seen", "k_used", "smp")).alias("_f")
         return (
             emitted.groupBy("event_type")
@@ -1234,8 +1142,6 @@ def streaming_rank_sketch_event_values(spark: SparkSession, sf: str):
                 rank_sketch_quantile(F.col("_f.smp"), 9, 10).alias("p90_est"),
             )
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1296,41 +1202,19 @@ def streaming_count_min_user_heavy_hitters(spark: SparkSession, sf: str):
     cells FOREVER — the live heavy-hitter monitor shape (which users
     dominate the last-N-batches window is the same plan plus a window
     key); emission is matrix-sized, never corpus-sized."""
-    import shutil
-
     from byte_convert_avro_spark.operators.sketch import (
         count_min_build,
         count_min_estimate,
     )
 
     ev = t(spark, sf, "events")
-    shard = hash_bucket("event_id", 4).cast("int")
-    raw = ev.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "count_min_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, hash_shards(ev, "event_id"), ev.schema, "count_min_shards_"
+    ) as stream:
         matrix_stream = count_min_build(
             stream.filter(F.col("user_id").isNotNull()), "user_id", d=3, w=32
         )
-        name = f"stream_{uuid.uuid4().hex[:12]}"
-        q = (
-            matrix_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        matrix = spark.table(name)
+        matrix = drain_to_memory(matrix_stream, "complete")
         exact = (
             ev.filter(F.col("user_id").isNotNull())
             .groupBy("user_id")
@@ -1346,8 +1230,6 @@ def streaming_count_min_user_heavy_hitters(spark: SparkSession, sf: str):
             F.col("est").alias("est_cnt"),
             (F.col("est") - F.col("exact_cnt")).alias("overestimate"),
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1387,39 +1269,17 @@ def streaming_hll_distinct_users(spark: SparkSession, sf: str):
     |types| x m rows FOREVER — the live distinct-users dashboard shape;
     idempotent MAX also makes at-least-once replay harmless, a property
     the linear count-min does NOT have."""
-    import shutil
-
     from byte_convert_avro_spark.operators.sketch import (
         hll_finalize,
         hll_registers,
     )
 
     ev = t(spark, sf, "events")
-    shard = hash_bucket("event_id", 4).cast("int")
-    raw = ev.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "hll_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, hash_shards(ev, "event_id"), ev.schema, "hll_shards_"
+    ) as stream:
         regs_stream = hll_registers(stream, ["event_type"], "user_id")
-        name = f"stream_{uuid.uuid4().hex[:12]}"
-        q = (
-            regs_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        regs = spark.table(name)
+        regs = drain_to_memory(regs_stream, "complete")
         fin = hll_finalize(regs, ["event_type"])
         h = F.conv(
             F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
@@ -1431,8 +1291,6 @@ def streaming_hll_distinct_users(spark: SparkSession, sf: str):
             .agg(F.countDistinct("h").cast("long").alias("exact_distinct"))
         )
         return fin.join(ex, "event_type").orderBy("event_type")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1458,23 +1316,12 @@ def streaming_weighted_user_sample(spark: SparkSession, sf: str):
     the identical top-5 weighted sample as the one-pass batch build,
     gated against the SAME oracle — the streaming path changes
     nothing."""
-    import shutil
-
     from pyspark.sql import Window as W
 
     ev = t(spark, sf, "events")
-    shard = hash_bucket("event_id", 4).cast("int")
-    raw = ev.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "wsample_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, hash_shards(ev, "event_id"), ev.schema, "wsample_shards_"
+    ) as stream:
         h = F.conv(
             F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
         ).cast("long")
@@ -1486,18 +1333,7 @@ def streaming_weighted_user_sample(spark: SparkSession, sf: str):
                 F.min(h).alias("sample_key"),
             )
         )
-        name = f"stream_{uuid.uuid4().hex[:12]}"
-        q = (
-            keyed_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        keyed = spark.table(name)
+        keyed = drain_to_memory(keyed_stream, "complete")
         rk = F.row_number().over(
             W.partitionBy("event_type").orderBy("sample_key", "user_id")
         )
@@ -1513,8 +1349,6 @@ def streaming_weighted_user_sample(spark: SparkSession, sf: str):
             )
             .orderBy("event_type", "rank")
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1542,8 +1376,6 @@ def streaming_psi_value_halves(spark: SparkSession, sf: str):
     oracle — the streaming path changes nothing.  Linear state means
     at-least-once replay WOULD double-count (the count-min caveat, not
     the HLL one) — exactly-once file-source semantics carry the gate."""
-    import shutil
-
     from byte_convert_avro_spark.queries.base import cents
     from byte_convert_avro_spark.queries.relational_r14c import psi_finalize
 
@@ -1567,18 +1399,9 @@ def streaming_psi_value_halves(spark: SparkSession, sf: str):
     # the stream side joins the same 1-row bounds on a constant key —
     # the supported stream-static EQUI join spelling of a broadcast
     keyed_bounds = bounds.withColumn("_k", F.lit(1))
-    shard = hash_bucket("event_id", 4).cast("int")
-    raw = ev.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "psi_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, hash_shards(ev, "event_id"), ev.schema, "psi_shards_"
+    ) as stream:
         labeled = (
             stream.filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
             .select(
@@ -1593,26 +1416,13 @@ def streaming_psi_value_halves(spark: SparkSession, sf: str):
         late_stream = labeled.groupBy("bucket").agg(
             F.count("*").cast("long").alias("n_late")
         )
-        name = f"stream_{uuid.uuid4().hex[:12]}"
-        q = (
-            late_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        late = spark.table(name)
+        late = drain_to_memory(late_stream, "complete")
         cnt = early_cnt.join(late, "bucket", "full").select(
             "bucket",
             F.coalesce("n_early", F.lit(0)).alias("n_early"),
             F.coalesce("n_late", F.lit(0)).alias("n_late"),
         )
         return psi_finalize(spark, cnt)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1686,33 +1496,18 @@ def streaming_misra_gries_tokens(spark: SparkSession, sf: str):
     value-gated entry for entry.  Scale: state is k entries FOREVER —
     the live trending-tokens monitor; emission is k-sized, never
     corpus-sized."""
-    import shutil
-
-    from byte_convert_avro_spark.streaming import run_stream_to_memory
     from byte_convert_avro_spark.streaming.misra_gries import (
         streaming_misra_gries,
     )
 
     docs = t(spark, sf, "documents")
-    shard = hash_bucket("doc_id", 4).cast("int")
-    raw = docs.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "mg_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, hash_shards(docs, "doc_id"), docs.schema, "mg_shards_"
+    ) as stream:
         tok = stream.select(
             F.explode(F.split("text", " ")).alias("token")
         ).filter(F.col("token") != "")
-        sk = streaming_misra_gries(tok)
-        q, name = run_stream_to_memory(sk, output_mode="update")
-        q.stop()
-        emitted = spark.table(name)
+        emitted = drain_to_memory(streaming_misra_gries(tok), "update")
         final = F.max(F.struct("n_seen", "k_used", "tokens", "ests")).alias(
             "_f"
         )
@@ -1732,8 +1527,6 @@ def streaming_misra_gries_tokens(spark: SparkSession, sf: str):
                 "k_used",
             )
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1762,26 +1555,15 @@ def streaming_purchase_auc_rank_cells(spark: SparkSession, sf: str):
     bit-for-bit against the SAME oracle.  Linear state replays like
     count-min (at-least-once would double-count; exactly-once
     file-source semantics carry the gate)."""
-    import shutil
-
     from byte_convert_avro_spark.queries.base import cents
     from byte_convert_avro_spark.queries.relational_r14f import (
         auc_rank_finalize,
     )
 
     ev = t(spark, sf, "events")
-    shard = hash_bucket("event_id", 4).cast("int")
-    raw = ev.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "auc_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, hash_shards(ev, "event_id"), ev.schema, "auc_shards_"
+    ) as stream:
         dom_stream = (
             stream.filter(
                 F.col("value").isNotNull() & F.col("event_type").isNotNull()
@@ -1798,25 +1580,12 @@ def streaming_purchase_auc_rank_cells(spark: SparkSession, sf: str):
                 F.sum("pos").cast("long").alias("tp"),
             )
         )
-        name = f"stream_{uuid.uuid4().hex[:12]}"
-        q = (
-            dom_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        dom = spark.table(name).select(
+        dom = drain_to_memory(dom_stream, "complete").select(
             F.col("vc").cast("long").alias("vc"),
             F.col("t").cast("long").alias("t"),
             F.col("tp").cast("long").alias("tp"),
         )
         return auc_rank_finalize(dom)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1880,42 +1649,20 @@ def streaming_count_sketch_tokens(spark: SparkSession, sf: str):
     (the unbiasedness contrast to count-min's est >= exact).  Scale:
     streaming state is the 96 signed cells FOREVER; emission is
     matrix-sized, never corpus-sized."""
-    import shutil
-
     from byte_convert_avro_spark.operators.sketch import (
         count_sketch_build,
         count_sketch_estimate,
     )
 
     docs = t(spark, sf, "documents")
-    shard = hash_bucket("doc_id", 4).cast("int")
-    raw = docs.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "count_sketch_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, hash_shards(docs, "doc_id"), docs.schema, "count_sketch_shards_"
+    ) as stream:
         tok_stream = stream.select(
             F.explode(F.split("text", " ")).alias("token")
         ).filter(F.col("token") != "")
         matrix_stream = count_sketch_build(tok_stream, "token", d=3, w=32)
-        name = f"stream_{uuid.uuid4().hex[:12]}"
-        q = (
-            matrix_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        matrix = spark.table(name)
+        matrix = drain_to_memory(matrix_stream, "complete")
         tok = docs.select(
             F.explode(F.split("text", " ")).alias("token")
         ).filter(F.col("token") != "")
@@ -1932,8 +1679,6 @@ def streaming_count_sketch_tokens(spark: SparkSession, sf: str):
             F.col("est").alias("est_cnt"),
             (F.col("est") - F.col("exact_cnt")).alias("err"),
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1981,8 +1726,6 @@ def streaming_anova_moment_cells(spark: SparkSession, sf: str):
     against the batch entry's own oracle spelling and must reproduce
     its rows bit-for-bit.  Scale: state is |event types| rows of three
     int64 cells FOREVER; the finalize is constant-size arithmetic."""
-    import shutil
-
     from byte_convert_avro_spark.queries.base import cents
     from byte_convert_avro_spark.queries.relational_r14g import (
         _anova_tail,
@@ -1990,18 +1733,9 @@ def streaming_anova_moment_cells(spark: SparkSession, sf: str):
     )
 
     ev = t(spark, sf, "events")
-    shard = hash_bucket("event_id", 4).cast("int")
-    raw = ev.withColumn("_shard", shard)
-    d = write_ordered_shards(
-        [raw.filter(F.col("_shard") == i).drop("_shard") for i in range(4)],
-        "anova_shards_",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    with replay_shards(
+        spark, hash_shards(ev, "event_id"), ev.schema, "anova_shards_"
+    ) as stream:
         f = stream.filter(
             F.col("value").isNotNull() & F.col("event_type").isNotNull()
         ).select("event_type", cents("value").alias("vc"))
@@ -2010,18 +1744,7 @@ def streaming_anova_moment_cells(spark: SparkSession, sf: str):
             F.sum("vc").cast("long").alias("s_g"),
             F.sum(F.col("vc") * F.col("vc")).cast("long").alias("q_g"),
         )
-        name = f"stream_{uuid.uuid4().hex[:12]}"
-        q = (
-            g_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        g = spark.table(name)
+        g = drain_to_memory(g_stream, "complete")
         out = _anova_tail(g)
         return out.select(
             "event_type",
@@ -2034,5 +1757,3 @@ def streaming_anova_moment_cells(spark: SparkSession, sf: str):
             "ssw",
             "f_stat",
         ).orderBy("event_type")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

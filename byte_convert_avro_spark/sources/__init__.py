@@ -5,9 +5,12 @@ Connect runtime (O1/O18, README.md:16-26) — config, not code.  On Spark the
 equivalents are one-liners (``spark.read[Stream].format("kafka")``), so this
 package adds what a standing deployment actually needs around them:
 
-- ``kafka_records`` / ``kafka_record_stream`` — the Kafka-shaped record
-  sources (broker-backed where available, parquet-fixture-backed in this
-  container), one schema everywhere (``engine.KAFKA_RECORD_SCHEMA``).
+- ``kafka_records`` / ``kafka_record_stream`` — the broker-backed
+  Kafka-shaped record sources (batch and streaming), one schema
+  everywhere (``engine.KAFKA_RECORD_SCHEMA``).
+- ``kafka_records_from_parquet`` / ``kafka_records_from_jsonl`` — the
+  broker-less fixture sources in the same shape (parquet is batch only;
+  its streaming twin is ``streaming.stream_records``).
 - ``write_partitioned`` / ``write_bucketed`` — scale-aware parquet sinks:
   date/topic partition layout for pruning, bucketing for shuffle-free
   co-located joins on a standing key.

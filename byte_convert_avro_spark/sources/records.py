@@ -44,17 +44,10 @@ def kafka_record_stream(
     return reader.load()
 
 
-def kafka_records_from_parquet(
-    spark: SparkSession, path: str, streaming: bool = False,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Fixture-backed record source: parquet files in Kafka record shape.
-    The broker-less test/dev path — identical schema, identical plans."""
-    if streaming:
-        reader = spark.readStream.schema(KAFKA_RECORD_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.parquet(path)
+def kafka_records_from_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Fixture-backed batch record source: parquet files in Kafka record
+    shape.  The broker-less test/dev path — identical schema, identical
+    plans; its streaming twin is ``streaming.stream_records``."""
     return spark.read.schema(KAFKA_RECORD_SCHEMA).parquet(path)
 
 

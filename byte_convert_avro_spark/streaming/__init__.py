@@ -6,8 +6,11 @@ AvroTransform.java:118-214).  This package is the Spark-native expression
 of that streaming side:
 
 - ``pipeline``  — the decode projection (O4-O17) over ``readStream``
-  sources, plus test/driver harness helpers (file-based streams, memory
-  sinks, ``foreachBatch``).
+  sources, plus the harness helpers: file-based streams,
+  ``drain_to_memory`` (run a finite stream to a memory sink, stop it,
+  return the table) and ``run_stream_to_memory`` (the same, query left
+  live).  ``queries.streaming_queries.replay_shards`` replays ordered
+  shard files one per trigger.
 - ``windows``   — event-time tumbling/sliding windowed aggregations with
   watermarks (late-data discipline the reference lacks but any consumer
   of the decoded stream needs).
@@ -23,6 +26,7 @@ discipline, so batch output is the correctness oracle for the stream.
 from byte_convert_avro_spark.streaming.dedup import dedup_stream
 from byte_convert_avro_spark.streaming.pipeline import (
     decode_stream,
+    drain_to_memory,
     run_stream_to_memory,
     stream_records,
     use_rocksdb_state,
@@ -41,6 +45,7 @@ from byte_convert_avro_spark.streaming.windows import (
 __all__ = [
     "decode_stream",
     "dedup_stream",
+    "drain_to_memory",
     "run_stream_to_memory",
     "stream_records",
     "hourly_tumbling_stream",

@@ -13,6 +13,12 @@ partitions, and the only non-codegen stage is the dynamic-schema Python
 UDF (Arrow-batched, per-executor schema cache).  The file-based helpers
 here exist because this container has no Kafka broker — they drive the
 same unchanged plan from parquet fixtures in Kafka-record shape.
+
+Harness: ``drain_to_memory`` is the one way to run a finite stream to
+completion (memory sink, drain, stop, return the table);
+``run_stream_to_memory`` hands back the live query for callers that feed
+it step by step.  Shard replay (``replay_shards``) lives next to the
+streaming queries that use it (``queries/streaming_queries.py``).
 """
 
 from __future__ import annotations
@@ -89,3 +95,13 @@ def run_stream_to_memory(
     )
     q.processAllAvailable()
     return q, table
+
+
+def drain_to_memory(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run a finite streaming DataFrame to a memory sink, drain it, stop
+    the query and return the sink's table — the one-shot harness every
+    oracle-gated streaming query uses.  A query whose drain raises has
+    already terminated, so there is nothing left to stop on that path."""
+    q, table = run_stream_to_memory(df, output_mode=output_mode)
+    q.stop()
+    return df.sparkSession.table(table)

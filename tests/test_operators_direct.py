@@ -2861,40 +2861,6 @@ def test_prefix_filter_jaccard_rejects_bad_threshold(spark):
         prefix_filter_jaccard(tokens, "doc_id", "token", 6, 5)
 
 
-def test_prefix_filter_jaccard_verify_modes_identical(spark):
-    """Both verify strategies (pair-keyed join vs array_intersect) give
-    the identical pair set — the A/B'd wash (NOTES r13)."""
-    import pytest as _pytest
-
-    from byte_convert_avro_spark.operators.dedup import prefix_filter_jaccard
-
-    rows = [
-        (d, t)
-        for d, ts in {
-            1: {"a", "b", "c", "d"},
-            2: {"a", "b", "c", "e"},
-            3: {"a", "b", "c", "d", "e"},
-            4: {"x", "y"},
-        }.items()
-        for t in ts
-    ]
-    tokens = spark.createDataFrame(rows, "doc_id int, token string")
-    outs = {
-        m: sorted(
-            map(
-                tuple,
-                prefix_filter_jaccard(
-                    tokens, "doc_id", "token", 3, 5, verify=m
-                ).collect(),
-            )
-        )
-        for m in ("join", "arrays")
-    }
-    assert outs["join"] == outs["arrays"] and outs["join"]
-    with _pytest.raises(ValueError, match="verify"):
-        prefix_filter_jaccard(tokens, "doc_id", "token", 3, 5, verify="bogus")
-
-
 def test_hll_parameterized_precision_cross_engine(spark):
     """The p-parameterized HLL pipeline hash-matches its DuckDB SQL
     twin at precisions other than the gated default (p=4 exercises the

@@ -192,6 +192,7 @@ def test_jsonl_record_source_roundtrip_and_decode(spark, tmp_path):
         kafka_records_from_jsonl,
         write_records_jsonl,
     )
+    from byte_convert_avro_spark.streaming import drain_to_memory
     from byte_convert_avro_spark.wire import encode_wire
 
     schema = (
@@ -230,18 +231,9 @@ def test_jsonl_record_source_roundtrip_and_decode(spark, tmp_path):
 
     # streaming reader: same rows through a micro-batch
     sb = kafka_records_from_jsonl(spark, d, streaming=True, max_files_per_trigger=1)
-    q = (
-        eng.transform(sb)
-        .writeStream.format("memory")
-        .queryName("jsonl_src_test")
-        .outputMode("append")
-        .start()
+    got = sorted(
+        bytes(r.value).decode() for r in drain_to_memory(eng.transform(sb)).collect()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = sorted(bytes(r.value).decode() for r in spark.table("jsonl_src_test").collect())
     assert got == out_orig
 
 

@@ -18,6 +18,7 @@ from byte_convert_avro_spark.engine import KAFKA_RECORD_SCHEMA, Engine, EngineCo
 from byte_convert_avro_spark.schema_store import LocalSchemaStore
 from byte_convert_avro_spark.streaming import (
     decode_stream,
+    drain_to_memory,
     hourly_tumbling_stream,
     run_stream_to_memory,
     sessionize_stateful,
@@ -88,14 +89,12 @@ def test_stream_decode_matches_batch(spark, tmp_path):
         for r in eng.transform(spark.read.parquet(src)).collect()
     }
 
-    q, table = run_stream_to_memory(decode_stream(eng, stream_records(spark, src)))
-    try:
-        streamed = {
-            r.offset: (bytes(r.value) if r.value is not None else None)
-            for r in spark.table(table).collect()
-        }
-    finally:
-        q.stop()
+    streamed = {
+        r.offset: (bytes(r.value) if r.value is not None else None)
+        for r in drain_to_memory(
+            decode_stream(eng, stream_records(spark, src))
+        ).collect()
+    }
     assert streamed == batch
     assert streamed[99] is None  # tombstone passthrough (O7)
 
@@ -291,13 +290,9 @@ def test_stream_stream_interval_join(spark, tmp_path):
         & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
         "inner",
     )
-    q, table = run_stream_to_memory(joined)
-    try:
-        got = sorted(
-            (r.p_user, int(r.v_value)) for r in spark.table(table).collect()
-        )
-    finally:
-        q.stop()
+    got = sorted(
+        (r.p_user, int(r.v_value)) for r in drain_to_memory(joined).collect()
+    )
     assert got == [(1, 1), (1, 2)]  # both views within the hour; user 2 none
 
 
@@ -490,11 +485,8 @@ def test_stream_failfast_aborts_query(spark, tmp_path):
         q.stop()
 
     eng_ok = Engine(EngineConfig(avro_topics="t:true"), store=store)
-    q2, table = run_stream_to_memory(decode_stream(eng_ok, stream_records(spark, src)))
-    try:
-        out = {r.offset: r._error for r in spark.table(table).collect()}
-    finally:
-        q2.stop()
+    decoded = drain_to_memory(decode_stream(eng_ok, stream_records(spark, src)))
+    out = {r.offset: r._error for r in decoded.collect()}
     assert out[0] is None and out[1] is not None
 
 
@@ -924,13 +916,8 @@ def test_streaming_rank_sketch_matches_batch_any_sharding(spark, tmp_path):
     import pandas as pd
 
     from byte_convert_avro_spark.operators.sketch import rank_sketch_grouped
-    from byte_convert_avro_spark.queries.streaming_queries import (
-        write_ordered_shards,
-    )
-    from byte_convert_avro_spark.streaming import (
-        run_stream_to_memory,
-        streaming_rank_sketch,
-    )
+    from byte_convert_avro_spark.queries.streaming_queries import replay_shards
+    from byte_convert_avro_spark.streaming import streaming_rank_sketch
     from byte_convert_avro_spark.streaming.rank_sketch import SKETCH_K
 
     rows = [
@@ -952,18 +939,8 @@ def test_streaming_rank_sketch_matches_batch_any_sharding(spark, tmp_path):
         ("skewed", [df.filter(F.col("event_id") < 2700),
                     df.filter(F.col("event_id") >= 2700)]),
     ):
-        d = write_ordered_shards(shards, f"rs_{label}_")
-        try:
-            stream = (
-                spark.readStream.schema(df.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(d)
-            )
-            q, name = run_stream_to_memory(
-                streaming_rank_sketch(stream), output_mode="update"
-            )
-            q.stop()
-            emitted = spark.table(name)
+        with replay_shards(spark, shards, df.schema, f"rs_{label}_") as stream:
+            emitted = drain_to_memory(streaming_rank_sketch(stream), "update")
             final = (
                 emitted.groupBy("event_type")
                 .agg(F.max(F.struct("n_seen", "k_used", "smp")).alias("f"))
@@ -974,10 +951,6 @@ def test_streaming_rank_sketch_matches_batch_any_sharding(spark, tmp_path):
                 for r in final.collect()
             }
             assert got == batch, f"{label}: streaming != batch"
-        finally:
-            import shutil
-
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_events_stream_reads_spark_written_directory_layout(spark, tmp_path):
@@ -990,7 +963,6 @@ def test_events_stream_reads_spark_written_directory_layout(spark, tmp_path):
     stream — caught only because the oracle sat next to it at sf1."""
     from byte_convert_avro_spark.queries.base import t
     from byte_convert_avro_spark.queries.streaming_queries import _events_stream
-    from byte_convert_avro_spark.streaming import run_stream_to_memory
 
     src = t(spark, "/root/testdata/sf0.001", "events")
     sf_dir = str(tmp_path / "sfdir")
@@ -998,11 +970,5 @@ def test_events_stream_reads_spark_written_directory_layout(spark, tmp_path):
     src.repartition(3).write.parquet(f"{sf_dir}/events.parquet")
 
     stream = _events_stream(spark, sf_dir)
-    q, name = run_stream_to_memory(
-        stream.groupBy().count(), output_mode="complete"
-    )
-    try:
-        got = spark.table(name).collect()[0][0]
-    finally:
-        q.stop()
+    got = drain_to_memory(stream.groupBy().count(), "complete").collect()[0][0]
     assert got == src.count()
