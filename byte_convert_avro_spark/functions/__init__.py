@@ -6,6 +6,9 @@ function library ✗" — its only computation is the decode map).  This
 module is the engine's curated column vocabulary: every function returns
 a ``Column`` built from ``pyspark.sql.functions`` primitives, so all of
 them stay inside whole-stage codegen (no Python in any of these paths).
+``md5_long`` is the one content-stable hash (md5 hex digits read as a
+long) that sampling, sharding and the sketches share; ``hash_bucket`` is
+its ``% mod`` form.
 DataFrame-shaped operators (dedup, ANN search, as-of join, …) live in
 ``operators/``; wire-format expressions in ``wire.py``.
 """
@@ -33,6 +36,8 @@ __all__ = [
     "dot", "l2_norm", "cosine_similarity", "l2_distance",
     # text
     "n_tokens", "n_words", "punct_ratio", "uppercase_ratio", "content_hash",
+    # content-stable hash
+    "md5_long", "hash_bucket",
     # time
     "epoch_us", "time_bucket",
 ]
@@ -106,6 +111,34 @@ def content_hash(text: Column | str) -> Column:
     """md5 content key — uniform 128-bit dedup/shuffle key."""
     text = F.col(text) if isinstance(text, str) else text
     return F.md5(text)
+
+
+# -- content-stable hash ----------------------------------------------------
+
+def md5_long(col: Column | str, n: int = 8, start: int = 1) -> Column:
+    """THE content-stable hash: ``n`` hex digits of
+    ``md5(CAST(col AS STRING))`` from 1-based digit ``start``, read as a
+    long.  Sampling, sharding, the sketches (HLL, KMV, count-min,
+    count-sketch, Misra-Gries, rank sketch) and the media fixtures all
+    derive from it, so every Spark value hash-matches its DuckDB twin
+    ``('0x' || substr(md5(CAST(x AS VARCHAR)), start, n))::BIGINT``.
+    ``n <= 15`` fits a long (16 digits can exceed it).  Callers salt
+    ``col`` themselves (``F.concat(x, F.lit(":cm0"))``) and reduce with
+    their own ``%``, ``pmod`` or ``bitwiseAND``.  On string input the
+    cast is a no-op the optimizer drops, so the plan is the bare
+    ``conv(substring(md5(col)))``."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.conv(F.substring(F.md5(c.cast("string")), start, n), 16, 10).cast("long")
+
+
+def hash_bucket(col: Column | str, mod: int) -> Column:
+    """Content-stable uniform bucket in [0, mod): ``md5_long(col) % mod``.
+    THE reproducible-sampling primitive — split assignment, sharding,
+    sampling quotas, and decontamination's train/bench membership all
+    derive from this ONE definition, itself the 8-digit :func:`md5_long`,
+    so they stay mutually consistent.  DuckDB twin:
+    ``('0x' || substr(md5(CAST(x AS VARCHAR)), 1, 8))::BIGINT % mod``."""
+    return md5_long(col) % mod
 
 
 # -- event time -------------------------------------------------------------

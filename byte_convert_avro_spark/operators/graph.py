@@ -11,10 +11,12 @@
 - :func:`label_propagation_rounds` — synchronous label propagation
 - :func:`k_core_peel` — fixed-round k-core peeling
 
-Two helpers hold the recurring idioms: :func:`both_directions` (each
+Three helpers hold the recurring idioms: :func:`both_directions` (each
 edge in both orientations from one evaluation of its subtree, also used
-by ``dedup.py`` and the query modules) and :func:`_oriented_adjacency`
-(the triangle operators' degree-oriented adjacency).
+by ``dedup.py`` and the query modules), :func:`endpoints` (both endpoints
+of each edge as one column, the node set after ``distinct``) and
+:func:`_oriented_adjacency` (the triangle operators' degree-oriented
+adjacency).
 
 The iterative-job discipline matches ``connected_components`` and
 ``kmeans_lloyd``: one shuffle-join + one grouped fold per round, lineage
@@ -26,11 +28,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel  # noqa: F401 — storage option type
-
+from pyspark.storagelevel import StorageLevel
 
 from byte_convert_avro_spark.functions import (
     bounded_ordered_agg as _bounded_ordered_agg,
+    md5_long,
     ordered_fold as _ordered_fold,
 )
 from byte_convert_avro_spark.plans.stats_reset import reset_plan_stats
@@ -66,6 +68,17 @@ def both_directions(
         ).alias("_dir"),
         *carry,
     ).select(F.col("_dir")[na].alias(na), F.col("_dir")[nb].alias(nb), *carry)
+
+
+def endpoints(edges: DataFrame, a: str, b: str, name: str) -> DataFrame:
+    """Both endpoints of every edge as one column ``name``: one row per
+    (edge, end), so ``.distinct()`` gives the node set and
+    ``.groupBy(name)`` the degrees.  One row-local explode, NOT a union
+    of the two projections: a union's branches each re-evaluate
+    ``edges``' whole subtree (for the co-purchase graph the lineitem
+    self-join); the explode emits both ends from ONE evaluation, and the
+    row multiset is the same."""
+    return edges.select(F.explode(F.array(F.col(a), F.col(b))).alias(name))
 
 
 def _oriented_adjacency(
@@ -121,9 +134,7 @@ def pagerank_fixed_rounds(
     dst: str = "dst",
     n_rounds: int = 3,
     damping: float = 0.85,
-    deterministic: bool = True,
     fold_chunk: int | None = None,
-    storage: "StorageLevel | None" = None,
 ) -> DataFrame:
     """PageRank after exactly ``n_rounds`` power iterations over a
     directed edge list (pass both directions for an undirected graph —
@@ -146,50 +157,28 @@ def pagerank_fixed_rounds(
     nodes; ``localCheckpoint`` truncates lineage so plans don't grow with
     rounds.
 
-    ``deterministic=False`` swaps the ordered fold for a plain ``SUM``
-    (map-side partial aggregation, ~3-4x faster on high-in-degree graphs
-    — measured at local sf1) at the cost of last-ulp reproducibility
-    across partitionings/engines; ranks differ only by float accumulation
-    order.  Use it at deployment when bit-parity is not required.
-
-    ``fold_chunk`` (deterministic mode only): bound the per-node fold
-    arrays via the two-level chunked fold
-    (functions.bounded_ordered_agg) — REQUIRED at scale, where a hub
-    node's in-degree is unbounded (the round-6 verdict's finding: the
-    flat fold holds one array per dst).  Needs NON-NEGATIVE INTEGER node
-    ids (``pagerank_trade_graph`` encodes customer/supplier keys as
-    2k / 2k+1 for exactly this); ``None`` keeps the flat fold, which
-    accepts any orderable id type.  The fold order (and so the last-ulp
-    rank values) follows the id ordering of whichever mode is chosen.
-
-    ``storage`` sets the StorageLevel of every localCheckpoint in the
-    operator (the static edge frame — by far the largest resident — plus
-    nodes and the per-round ranks).  Default ``None`` keeps Spark's
-    deserialized MEMORY_AND_DISK: fastest, but on ``local[32]`` (driver
-    JVM = the executor) a 12M-edge graph's deserialized rows OOM'd an
-    8g heap (NOTES sf10 stress).  PySpark's ``StorageLevel.MEMORY_AND_DISK``
-    (Serialized — unlike the Scala constant of the same name)
-    stores the checkpoint blocks serialized (~3-5x smaller for
-    wide-integer rows) at a per-round deserialization cost — measured at
-    sf10 it runs in a 12g heap where the default needed 24g, within
-    noise of the 24g time (SCALE.md round-8 table).  Storage level does
-    not affect results or the per-round job count."""
+    ``fold_chunk``: bound the per-node fold arrays via the two-level
+    chunked fold (functions.bounded_ordered_agg) — REQUIRED at scale,
+    where a hub node's in-degree is unbounded (the round-6 verdict's
+    finding: the flat fold holds one array per dst).  Needs NON-NEGATIVE
+    INTEGER node ids (``pagerank_trade_graph`` encodes customer/supplier
+    keys as 2k / 2k+1 for exactly this); ``None`` keeps the flat fold,
+    which accepts any orderable id type.  The fold order (and so the last-ulp
+    rank values) follows the id ordering of whichever mode is chosen."""
     if n_rounds < 1:
         raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
-    ckpt = (
-        (lambda df: df.localCheckpoint(storageLevel=storage))
-        if storage is not None
-        else (lambda df: df.localCheckpoint())
-    )
-    # both endpoints via a row-local explode, not union(self): union's
-    # branches each re-evaluate the caller's full edge subtree (for the
-    # co-purchase graph that is the lineitem self-join) — explode emits
-    # both from ONE evaluation.  Same row multiset -> same distinct.
-    nodes = ckpt(
-        edges.select(
-            F.explode(F.array(F.col(src), F.col(dst))).alias("v")
-        ).distinct()
-    )
+
+    def ckpt(df: DataFrame) -> DataFrame:
+        # PySpark's StorageLevel.MEMORY_AND_DISK is SERIALIZED (unlike the
+        # Scala constant of the same name): ~3-5x smaller blocks for
+        # wide-integer rows.  On local[32] (driver JVM = the executor) a
+        # 12M-edge graph's deserialized checkpoints OOM'd an 8g heap; the
+        # serialized ones ran sf10 in 12g where deserialized needed 24g,
+        # and faster: 140.8 s vs 272 s (SCALE.md round-8 table).  Values
+        # and job counts are the same at any storage level.
+        return df.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+    nodes = ckpt(endpoints(edges, src, dst, "v").distinct())
     n = nodes.count()
     outdeg = edges.groupBy(src).agg(F.count("*").alias("_deg"))
     e = ckpt(edges.join(outdeg, src))
@@ -203,13 +192,12 @@ def pagerank_fixed_rounds(
             F.col(src).alias("_s"),
             (F.col("rank") / F.col("_deg")).alias("_c"),
         )
-        if deterministic and fold_chunk is not None:
+        if fold_chunk is not None:
             sums = _bounded_ordered_agg(
                 contrib, ["v"], "_s", "_c", chunk=fold_chunk
             ).select("v", F.col("osum").alias("_sum"))
         else:
-            agg_fn = _ordered_fold("_s", "_c") if deterministic else F.sum("_c")
-            sums = contrib.groupBy("v").agg(agg_fn.alias("_sum"))
+            sums = contrib.groupBy("v").agg(_ordered_fold("_s", "_c").alias("_sum"))
         ranks = ckpt(
             nodes.join(sums, "v", "left")
             .select(
@@ -306,13 +294,7 @@ def walk_to_root(
     edges = parents.select(
         F.col(node).alias("__pn"), F.col(parent).alias("__pp")
     )
-    # row-local explode, not union(self) — one evaluation of the
-    # caller's parents subtree for both endpoint sets
-    nodes = (
-        parents.select(
-            F.explode(F.array(F.col(node), F.col(parent))).alias("n")
-        ).distinct()
-    )
+    nodes = endpoints(parents, node, parent, "n").distinct()
     state = nodes.select("n", F.col("n").alias("cur"), F.lit(0).alias("depth"))
     for _ in range(max_rounds):
         joined = state.join(edges, state["cur"] == edges["__pn"], "left")
@@ -510,17 +492,10 @@ def neighborhood_kmv(
     e = edges.select(
         F.col(src).alias("__s"), F.col(dst).alias("__d")
     ).localCheckpoint(eager=False)
-    hv = F.conv(
-        F.substring(F.md5(F.col("__n").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    # row-local explode, not unionByName(self) — one evaluation of the
-    # caller's edge subtree for both endpoint sets
-    nodes = (
-        e.select(
-            F.explode(F.array(F.col("__s"), F.col("__d"))).alias("__n")
-        ).distinct()
+    nodes = endpoints(e, "__s", "__d", "__n").distinct()
+    sketch = nodes.select("__n", md5_long("__n").alias("__hv")).localCheckpoint(
+        eager=False
     )
-    sketch = nodes.select("__n", hv.alias("__hv")).localCheckpoint(eager=False)
     w = W.partitionBy("__n").orderBy("__hv")
     prev = F.lag("__hv").over(w)
     out = None

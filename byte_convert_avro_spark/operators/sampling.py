@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
+
 
 def weighted_bottom_k(
     df: DataFrame,
@@ -75,19 +77,9 @@ def weighted_bottom_k(
             "use the float-key single-engine form for unbounded weights"
         )
     j = F.explode(F.sequence(F.lit(1), F.col("_w").cast("int"))).alias("_j")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.col(id_col).cast("string"), F.col("_j").cast("string")
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long(
+        F.concat_ws(":", F.col(id_col).cast("string"), F.col("_j").cast("string"))
+    )
     keyed = (
         base.select(*strata, id_col, "_w", j)
         .select(*strata, id_col, "_w", h.alias("_h"))

@@ -362,7 +362,7 @@ def kmeans_minibatch(
     ]
     dim = len(cents[0][1]) if cents else 0
 
-    from byte_convert_avro_spark.queries.base import hash_bucket
+    from byte_convert_avro_spark.functions import hash_bucket
 
     for r_i in range(n_iter):
         salt = F.concat(F.col("id").cast("string"), F.lit(f":mb{r_i}"))

@@ -23,15 +23,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
+
 
 def _bloom_pos(col: Column, i: int, m_bits: int) -> Column:
     """Hash i of the key -> bit position in [0, m_bits): first 8 md5 hex
-    digits of ``key || ':bf' || i`` (the ``hash_bucket`` discipline —
+    digits of ``key || ':bf' || i`` (``functions.md5_long`` —
     content-stable, engine-portable)."""
-    salted = F.concat(col.cast("string"), F.lit(f":bf{i}"))
-    return (
-        F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("long") % m_bits
-    )
+    return md5_long(F.concat(col.cast("string"), F.lit(f":bf{i}"))) % m_bits
 
 
 def bloom_build(
@@ -152,9 +151,7 @@ def kmv_grouped(
         raise ValueError(f"kmv_grouped needs chunks >= 1, got {chunks}")
     from pyspark.sql import Window as W
 
-    hv = F.conv(
-        F.substring(F.md5(F.col(value).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    hv = md5_long(value)
     base = (
         df.filter(F.col(value).isNotNull())
         .select(*keys, hv.alias("_hv"))
@@ -231,15 +228,7 @@ def rank_sketch_grouped(
         raise ValueError(f"rank_sketch_grouped needs chunks >= 1, got {chunks}")
     from pyspark.sql import Window as W
 
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":rs"))),
-            1,
-            13,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_long(F.concat(F.col(id_col).cast("string"), F.lit(":rs")), 13)
     base = (
         df.filter(F.col(value).isNotNull())
         .select(
@@ -339,14 +328,7 @@ def count_min_build(
     c = F.col(item).cast("string")
     pos = F.array(
         *[
-            F.pmod(
-                F.conv(
-                    F.substring(F.md5(F.concat(c, F.lit(f":cm{i}"))), 1, 8),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(w),
-            )
+            F.pmod(md5_long(F.concat(c, F.lit(f":cm{i}"))), F.lit(w))
             for i in range(d)
         ]
     )
@@ -372,16 +354,7 @@ def count_min_estimate(
         F.posexplode(
             F.array(
                 *[
-                    F.pmod(
-                        F.conv(
-                            F.substring(
-                                F.md5(F.concat(c, F.lit(f":cm{i}"))), 1, 8
-                            ),
-                            16,
-                            10,
-                        ).cast("long"),
-                        F.lit(w),
-                    )
+                    F.pmod(md5_long(F.concat(c, F.lit(f":cm{i}"))), F.lit(w))
                     for i in range(d)
                 ]
             )
@@ -471,9 +444,7 @@ def hll_reg_rho(value: Column, p: int = HLL_P) -> tuple[Column, Column]:
     ``POSITION('1' IN LPAD(BIN(w), 32-p, '0'))``."""
     m, _, _, _ = _hll_consts(p)
     wbits = 32 - p
-    h = F.conv(F.substring(F.md5(value.cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    h = md5_long(value)
     reg = h.bitwiseAND(F.lit(m - 1))
     w = F.shiftright(h, p)
     rho = F.when(w == 0, F.lit(wbits + 1)).otherwise(
@@ -643,11 +614,7 @@ def misra_gries_summary(
     over domain/chunks rows, and a single-partition window over
     <= chunks*k rows — state is k-bounded at every level, and the
     guarantee is scale-free because it is relative to N."""
-    salted = F.concat(F.col(item).cast("string"), F.lit(":mg"))
-    ch = (
-        F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("long")
-        % chunks
-    )
+    ch = md5_long(F.concat(F.col(item).cast("string"), F.lit(":mg"))) % chunks
     exact = (
         df.filter(F.col(item).isNotNull())
         .groupBy(item)
@@ -706,21 +673,13 @@ def mg_sql(table_expr: str, item: str, k: int, chunks: int = 8) -> str:
 def _cs_pos(col: Column, i: int, w: int) -> Column:
     """Bucket hash for count-sketch row ``i`` (md5-salted like every
     sketch in this module — deterministic, SQL-twin-able)."""
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(col, F.lit(f":cs{i}"))), 1, 8), 16, 10
-        ).cast("long"),
-        F.lit(w),
-    )
+    return F.pmod(md5_long(F.concat(col, F.lit(f":cs{i}"))), F.lit(w))
 
 
 def _cs_sign(col: Column, i: int) -> Column:
     """±1 sign hash for row ``i`` (independent salt from the bucket)."""
     return F.lit(1) - F.lit(2) * F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(col, F.lit(f":css{i}"))), 1, 8), 16, 10
-        ).cast("long"),
-        F.lit(2),
+        md5_long(F.concat(col, F.lit(f":css{i}"))), F.lit(2)
     )
 
 

@@ -28,6 +28,10 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# hash_bucket lives next to md5_long, the one content-stable hash it
+# reduces; re-exported here for the query modules that import it.
+from byte_convert_avro_spark.functions import hash_bucket  # noqa: F401
+
 REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str | None] = {}
 #: Alternate LINEAR/log-linear oracle spellings for queries whose primary
@@ -179,19 +183,6 @@ def scratch_dir(prefix: str) -> str:
         atexit.register(_purge_scratch_dirs)
     _SCRATCH_DIRS.append(d)
     return d
-
-
-def hash_bucket(col, mod: int):
-    """Content-stable uniform bucket in [0, mod): first 8 md5 hex digits
-    of CAST(col AS STRING).  THE reproducible-sampling primitive — split
-    assignment, sharding, sampling quotas, and decontamination's
-    train/bench membership all derive from this ONE definition, so they
-    stay mutually consistent.  DuckDB twin:
-    ``('0x' || substr(md5(CAST(x AS VARCHAR)), 1, 8))::BIGINT % mod``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast("long") % mod
-    )
 
 
 def dsum(col: Column | str, scale: str = "decimal(18,4)") -> Column:

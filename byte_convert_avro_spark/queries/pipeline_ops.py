@@ -21,6 +21,7 @@ from byte_convert_avro_spark.queries.base import (
     spread,
     t,
 )
+from byte_convert_avro_spark.functions import md5_long
 
 _HEXPOS = "(strpos('0123456789abcdef', substr({h}, {i}, 1)) - 1)"
 
@@ -441,13 +442,7 @@ def multimodal_frame_samples(spark: SparkSession, sf: str):
     generate_series, pinning the sampling semantics exactly."""
     docs = t(spark, sf, "documents").select(
         "doc_id",
-        (
-            (
-                F.conv(F.substring(F.md5("text"), 1, 4), 16, 10).cast("long")
-                % 30000
-            )
-            + 1000
-        ).alias("duration_ms"),
+        (md5_long("text", 4) % 30000 + 1000).alias("duration_ms"),
     )
     fr = M.frame_sample_positions(docs, "duration_ms", every_ms=1000)
     return fr.groupBy("doc_id", "duration_ms").agg(
@@ -1317,9 +1312,7 @@ def kmv_distinct_users_estimate(spark: SparkSession, sf: str):
         ev.filter(F.col("user_id").isNotNull())
         .select(
             "event_type",
-            F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            .alias("h"),
+            md5_long("user_id").alias("h"),
         )
         .distinct()
     )
@@ -1418,8 +1411,6 @@ def pagerank_trade_graph(spark: SparkSession, sf: str):
     sort key; labels are reconstructed for output.  Scale notes in
     operators/graph.py (one shuffle join + one bounded grouped fold per
     round, lineage truncated)."""
-    from pyspark.storagelevel import StorageLevel
-
     from byte_convert_avro_spark.operators.graph import (
         both_directions,
         pagerank_fixed_rounds,
@@ -1436,13 +1427,8 @@ def pagerank_trade_graph(spark: SparkSession, sf: str):
         .distinct()
     )
     edges = both_directions(e0, "src", "dst")
-    # serialized checkpoint blocks: measured at sf10 (SCALE.md round-8)
-    # this runs in a 12g local heap where deserialized needed 24g, and
-    # FASTER (140.8s vs 272s) — smaller blocks beat re-deserialization.
-    # No effect on values or job counts.
     ranks = pagerank_fixed_rounds(
-        edges, "src", "dst", n_rounds=3, damping=0.85, fold_chunk=256,
-        storage=StorageLevel.MEMORY_AND_DISK,
+        edges, "src", "dst", n_rounds=3, damping=0.85, fold_chunk=256
     )
     half = F.call_function("div", F.col("v"), F.lit(2)).cast("string")
     return ranks.select(
@@ -1890,9 +1876,7 @@ def kmv_weekly_merge(spark: SparkSession, sf: str):
         ev.filter(F.col("user_id").isNotNull())
         .select(
             F.expr("(ts DIV 1000) DIV 86400000000").alias("day_idx"),
-            F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            .alias("h"),
+            md5_long("user_id").alias("h"),
         )
         .distinct()
     )
@@ -2403,9 +2387,7 @@ def kmv_source_merge_identity(spark: SparkSession, sf: str):
     d = t(spark, sf, "documents")
     hashed = d.select(
         "source",
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_long("doc_id").alias("h"),
     ).distinct()
     ws = W.partitionBy("source").orderBy("h")
     per_source = (
@@ -2463,6 +2445,8 @@ def copurchase_degree_histogram(spark: SparkSession, sf: str):
     integer is exact for the bucketing compare (both engines compute
     floor(log2(d)) identically on exact powers and between them).
     One degree aggregation + one tiny bucket rollup."""
+    from byte_convert_avro_spark.operators.graph import endpoints
+
     li = t(spark, sf, "lineitem")
     os_ = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
@@ -2474,13 +2458,7 @@ def copurchase_degree_histogram(spark: SparkSession, sf: str):
         .select(F.col("p").alias("a"), F.col("p2").alias("b"))
         .distinct()
     )
-    # row-local explode, not unionAll(self) — one evaluation of the
-    # (un-checkpointed) co-purchase self-join for both endpoints
-    deg = (
-        edges.select(F.explode(F.array("a", "b")).alias("n"))
-        .groupBy("n")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = endpoints(edges, "a", "b", "n").groupBy("n").agg(F.count("*").alias("d"))
     return deg.groupBy(
         F.floor(F.log2("d")).cast("long").alias("degree_log2_bucket")
     ).agg(
@@ -2658,10 +2636,9 @@ def multimodal_real_png_headers(spark: SparkSession, sf: str):
     from byte_convert_avro_spark.operators.multimodal import decode_image_metadata
 
     d = spread(t(spark, sf, "documents"), "doc_id")
-    md5 = F.md5("text")
-    w = (F.conv(F.substring(md5, 1, 4), 16, 10).cast("long") % 1920 + 1).cast("int")
-    h = (F.conv(F.substring(md5, 5, 4), 16, 10).cast("long") % 1080 + 1).cast("int")
-    ct_idx = F.conv(F.substring(md5, 9, 1), 16, 10).cast("long") % 4
+    w = (md5_long("text", 4) % 1920 + 1).cast("int")
+    h = (md5_long("text", 4, start=5) % 1080 + 1).cast("int")
+    ct_idx = md5_long("text", 1, start=9) % 4
     color_type = (ct_idx * 2).cast("int")  # 0, 2, 4, 6
     blob = F.concat(
         F.lit(b"\x89PNG\r\n\x1a\n"),
@@ -2709,16 +2686,15 @@ def multimodal_real_wav_headers(spark: SparkSession, sf: str):
     from byte_convert_avro_spark.operators.multimodal import decode_audio_metadata
 
     d = spread(t(spark, sf, "documents"), "doc_id")
-    md5 = F.md5("text")
-    rate_idx = F.conv(F.substring(md5, 1, 1), 16, 10).cast("long") % 5
+    rate_idx = md5_long("text", 1) % 5
     rate = (
         F.when(rate_idx == 0, 8000).when(rate_idx == 1, 16000)
         .when(rate_idx == 2, 22050).when(rate_idx == 3, 44100)
         .otherwise(48000)
     ).cast("int")
-    ch = (F.conv(F.substring(md5, 2, 1), 16, 10).cast("long") % 2 + 1).cast("int")
+    ch = (md5_long("text", 1, start=2) % 2 + 1).cast("int")
     data_len = (
-        F.conv(F.substring(md5, 3, 5), 16, 10).cast("long") % 1000000 + 1000
+        md5_long("text", 5, start=3) % 1000000 + 1000
     ).cast("int")
     byte_rate = (rate * ch * 2).cast("int")
     block_align = (ch * 2).cast("int")
@@ -2799,9 +2775,7 @@ def kmv_intersection_estimate(spark: SparkSession, sf: str):
     the exact columns are gate-side verification only — at 100 TB you'd
     ship just the 3x32 sketch rows."""
     ev = t(spark, sf, "events").filter(F.col("user_id").isNotNull())
-    h = F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    h = md5_long("user_id")
 
     def sketch(etype: str):
         return (
@@ -3010,14 +2984,13 @@ def multimodal_real_flac_headers(spark: SparkSession, sf: str):
     from byte_convert_avro_spark.operators.multimodal import decode_audio_metadata
 
     d = spread(t(spark, sf, "documents"), "doc_id")
-    md5 = F.md5("text")
-    rate_idx = F.conv(F.substring(md5, 1, 1), 16, 10).cast("long") % 4
+    rate_idx = md5_long("text", 1) % 4
     rate = (
         F.when(rate_idx == 0, 22050).when(rate_idx == 1, 44100)
         .when(rate_idx == 2, 48000).otherwise(96000)
     ).cast("long")
-    ch = (F.conv(F.substring(md5, 2, 1), 16, 10).cast("long") % 2 + 1).cast("long")
-    total = F.conv(F.substring(md5, 3, 7), 16, 10).cast("long") % 100000000 + 1
+    ch = (md5_long("text", 1, start=2) % 2 + 1).cast("long")
+    total = md5_long("text", 7, start=3) % 100000000 + 1
     # STREAMINFO pack: rate(20) | ch-1(3) | bps-1(5) | samples(36); bps=16
     pack = (
         rate * F.lit(1 << 44).cast("long")
@@ -3081,10 +3054,9 @@ def multimodal_real_mp3_headers(spark: SparkSession, sf: str):
     from byte_convert_avro_spark.operators.multimodal import decode_audio_metadata
 
     d = spread(t(spark, sf, "documents"), "doc_id")
-    md5 = F.md5("text")
-    br_idx = (F.conv(F.substring(md5, 1, 2), 16, 10).cast("long") % 14 + 1).cast("int")
-    sr_idx = (F.conv(F.substring(md5, 4, 1), 16, 10).cast("long") % 3).cast("int")
-    mono = (F.conv(F.substring(md5, 5, 1), 16, 10).cast("long") % 2).cast("int")
+    br_idx = (md5_long("text", 2) % 14 + 1).cast("int")
+    sr_idx = (md5_long("text", 1, start=4) % 3).cast("int")
+    mono = (md5_long("text", 1, start=5) % 2).cast("int")
     byte2 = F.shiftleft(br_idx, 4) + F.shiftleft(sr_idx, 2)
     byte3 = F.when(mono == 1, F.lit(0xC0)).otherwise(F.lit(0x00))
     blob = F.concat(
@@ -3131,10 +3103,9 @@ def multimodal_real_webp_headers(spark: SparkSession, sf: str):
     from byte_convert_avro_spark.operators.multimodal import decode_image_metadata
 
     d = spread(t(spark, sf, "documents"), "doc_id")
-    md5 = F.md5("text")
-    w = F.conv(F.substring(md5, 1, 3), 16, 10).cast("long") % 4000 + 1
-    h = F.conv(F.substring(md5, 4, 3), 16, 10).cast("long") % 3000 + 1
-    alpha = F.conv(F.substring(md5, 7, 1), 16, 10).cast("long") % 2
+    w = md5_long("text", 3) % 4000 + 1
+    h = md5_long("text", 3, start=4) % 3000 + 1
+    alpha = md5_long("text", 1, start=7) % 2
     pack = (w - 1) + (h - 1) * F.lit(1 << 14).cast("long") + alpha * F.lit(1 << 28).cast("long")
     blob = F.concat(
         F.lit(b"RIFF"),
@@ -3188,14 +3159,13 @@ def multimodal_real_mp4_headers(spark: SparkSession, sf: str):
     from byte_convert_avro_spark.operators.multimodal import decode_video_metadata
 
     d = spread(t(spark, sf, "documents"), "doc_id")
-    md5 = F.md5("text")
-    ts_idx = F.conv(F.substring(md5, 1, 1), 16, 10).cast("long") % 3
+    ts_idx = md5_long("text", 1) % 3
     timescale = (
         F.when(ts_idx == 0, 600).when(ts_idx == 1, 1000).otherwise(90000)
     ).cast("long")
-    duration = timescale + F.conv(F.substring(md5, 2, 5), 16, 10).cast("long") % 1000000
-    w = (F.conv(F.substring(md5, 7, 3), 16, 10).cast("long") % 1920 + 16)
-    h = (F.conv(F.substring(md5, 10, 3), 16, 10).cast("long") % 1080 + 16)
+    duration = timescale + md5_long("text", 5, start=2) % 1000000
+    w = (md5_long("text", 3, start=7) % 1920 + 16)
+    h = (md5_long("text", 3, start=10) % 1080 + 16)
 
     ftyp = F.concat(
         _be4(F.lit(20)), F.lit(b"ftyp"), F.lit(b"isom"), _be4(F.lit(0)), F.lit(b"isom")

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
 from byte_convert_avro_spark.queries.base import dsum, register, t
 
 
@@ -473,23 +474,12 @@ def order_value_bootstrap_ci(spark: SparkSession, sf: str):
     drawn = c.select("o_orderkey", "cents", reps).select(
         "b",
         "cents",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("o_orderkey").cast("string"),
-                        F.lit("|"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                13,
+        md5_long(
+            F.concat(
+                F.col("o_orderkey").cast("string"), F.lit("|"), F.col("b").cast("string")
             ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("v"),
+            13,
+        ).alias("v"),
     )
     cnt = (
         F.when(F.col("v") < _POIS1_T[0], 0)

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
 from byte_convert_avro_spark.operators import sketch as SK
 from byte_convert_avro_spark.operators.dedup import prefix_filter_jaccard
 from byte_convert_avro_spark.operators.skyline import skyline_2d
@@ -71,9 +72,7 @@ def hll_distinct_users_by_type(spark: SparkSession, sf: str):
     ev = t(spark, sf, "events")
     regs = SK.hll_registers(ev, ["event_type"], "user_id")
     fin = SK.hll_finalize(regs, ["event_type"])
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    h = md5_long("user_id")
     ex = (
         ev.filter(F.col("user_id").isNotNull())
         .select("event_type", h.alias("h"))
@@ -423,9 +422,7 @@ def hll_intersection_viewers_purchasers(spark: SparkSession, sf: str):
             ["est_viewers", "est_purchasers", "est_union"],
         )
     }
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    h = md5_long("user_id")
     ha = ev.filter(F.col("event_type") == "view").select(h.alias("h")).distinct()
     hb = ev.filter(F.col("event_type") == "purchase").select(h.alias("h")).distinct()
     ex = ha.join(hb, "h").agg(
@@ -530,9 +527,7 @@ def hll_rolling_7d_distinct_users(spark: SparkSession, sf: str):
         .agg(F.max("rho").alias("rho"))
     )
     fin = SK.hll_finalize(rolled, ["anchor"])
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    h = md5_long("user_id")
     ex = (
         base.select("day", h.alias("h"))
         .withColumn("anchor", F.explode(F.expr("sequence(day, day + 6)")))
@@ -877,9 +872,7 @@ def hll_weekly_overlap_matrix(spark: SparkSession, sf: str):
     est1 = SK.hll_finalize(weekly, ["week"]).select(
         "week", F.col("hll_estimate").alias("est")
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    h = md5_long("user_id")
     wh = base.select("week", h.alias("h")).distinct()
     ex = (
         wh.select(F.col("week").alias("week_a"), "h")

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
 from byte_convert_avro_spark.operators.dedup import (
     cap_pairs_per_doc,
     overlap_join,
@@ -445,9 +446,7 @@ def _weighted_user_sample(ev):
     MIN aggregate (the streaming-twin property)."""
     from pyspark.sql import Window as W
 
-    h = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    h = md5_long("event_id")
     keyed = (
         ev.filter(F.col("user_id").isNotNull())
         .groupBy("event_type", "user_id")

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
 from byte_convert_avro_spark.queries.base import (
     cents,
     hash_bucket,
@@ -461,9 +462,7 @@ def kmv_difference_estimate(spark: SparkSession, sf: str):
     to the intersection entry — k-row mergeable state per side, the
     exact anti-joins are verification only."""
     ev = t(spark, sf, "events").filter(F.col("user_id").isNotNull())
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    h = md5_long("user_id")
 
     def sketch(etype: str):
         return (

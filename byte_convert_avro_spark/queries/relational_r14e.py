@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
+from byte_convert_avro_spark.operators.graph import endpoints
 from byte_convert_avro_spark.queries.base import (
     cents,
     register,
@@ -539,22 +541,8 @@ def doc_feature_hashing_load(spark: SparkSession, sf: str):
         .filter(F.col("token") != "")
     )
     cnt = tok.groupBy("token").agg(F.count("*").cast("long").alias("c"))
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.col("token"), F.lit(":fh"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 256
-    )
-    sign = 1 - 2 * (
-        F.conv(
-            F.substring(F.md5(F.concat(F.col("token"), F.lit(":sg"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    bucket = md5_long(F.concat(F.col("token"), F.lit(":fh"))) % 256
+    sign = 1 - 2 * (md5_long(F.concat(F.col("token"), F.lit(":sg"))) % 2)
     b = (
         cnt.select("token", "c", bucket.alias("bucket"), sign.alias("sign"))
         .groupBy("bucket")
@@ -1174,10 +1162,8 @@ def copurchase_rich_club(spark: SparkSession, sf: str):
         .select(F.col("p").alias("a"), F.col("p2").alias("b"))
         .distinct()
     )
-    # row-local explode, not unionByName(self) — one evaluation of the
-    # co-purchase self-join for both endpoints
     nodes = (
-        e.select(F.explode(F.array("a", "b")).alias("n"))
+        endpoints(e, "a", "b", "n")
         .groupBy("n")
         .agg(F.count("*").cast("long").alias("deg"))
     )
@@ -1567,21 +1553,12 @@ def customer_part_negative_samples(spark: SparkSession, sf: str):
     pospc = pos.groupBy("c").agg(
         F.count("*").cast("long").alias("n_purchased")
     )
-    hv = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("c").cast("string"),
-                    F.lit(":ns:"),
-                    F.col("p_partkey").cast("string"),
-                )
-            ),
-            1,
-            13,
+    hv = md5_long(
+        F.concat(
+            F.col("c").cast("string"), F.lit(":ns:"), F.col("p_partkey").cast("string")
         ),
-        16,
-        10,
-    ).cast("long")
+        13,
+    )
     cand = (
         part.crossJoin(F.broadcast(top5.select("c")))
         .join(

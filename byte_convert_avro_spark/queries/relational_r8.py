@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
 from byte_convert_avro_spark.queries.base import cents, key_offset, register, t
 
 
@@ -1162,10 +1163,7 @@ def customer_merge_apply_cdc(spark: SparkSession, sf: str):
     snap = c.select(
         F.col("c_custkey").alias("k"), cents("c_acctbal").alias("bal_c")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("k").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 10
-    )
+    bucket = md5_long("k") % 10
     upd = snap.filter(bucket == 0).select(
         "k", F.lit("U").alias("op"), (F.col("bal_c") + 1000).alias("new_bal")
     )
@@ -1251,9 +1249,7 @@ def kmv_distinct_users_by_type(spark: SparkSession, sf: str):
     ev = t(spark, sf, "events").filter(F.col("user_id").isNotNull())
     h = ev.select(
         "event_type",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("hv"),
+        md5_long("user_id").alias("hv"),
     ).distinct().localCheckpoint()  # h is |distinct (type, hash)|-sized and
     # feeds |types|+2 jobs below — materialize once instead of re-scanning
     # raw events per job (round-8 review finding)

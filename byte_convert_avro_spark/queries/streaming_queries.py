@@ -34,6 +34,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from byte_convert_avro_spark.functions import md5_long
 from byte_convert_avro_spark.queries.base import (
     dsum,
     events_ts_to_ns,
@@ -1281,9 +1282,7 @@ def streaming_hll_distinct_users(spark: SparkSession, sf: str):
         regs_stream = hll_registers(stream, ["event_type"], "user_id")
         regs = drain_to_memory(regs_stream, "complete")
         fin = hll_finalize(regs, ["event_type"])
-        h = F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
+        h = md5_long("user_id")
         ex = (
             ev.filter(F.col("user_id").isNotNull())
             .select("event_type", h.alias("h"))
@@ -1322,9 +1321,7 @@ def streaming_weighted_user_sample(spark: SparkSession, sf: str):
     with replay_shards(
         spark, hash_shards(ev, "event_id"), ev.schema, "wsample_shards_"
     ) as stream:
-        h = F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
+        h = md5_long("event_id")
         keyed_stream = (
             stream.filter(F.col("user_id").isNotNull())
             .groupBy("event_type", "user_id")

@@ -9,8 +9,8 @@ package adds what a standing deployment actually needs around them:
   Kafka-shaped record sources (batch and streaming), one schema
   everywhere (``engine.KAFKA_RECORD_SCHEMA``).
 - ``kafka_records_from_parquet`` / ``kafka_records_from_jsonl`` — the
-  broker-less fixture sources in the same shape (parquet is batch only;
-  its streaming twin is ``streaming.stream_records``).
+  broker-less batch fixture sources in the same shape (the streaming
+  twin of a record fixture is ``streaming.stream_records``).
 - ``write_partitioned`` / ``write_bucketed`` — scale-aware parquet sinks:
   date/topic partition layout for pruning, bucketing for shuffle-free
   co-located joins on a standing key.

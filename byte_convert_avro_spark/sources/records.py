@@ -73,10 +73,7 @@ def _from_jsonl_shape(df: DataFrame) -> DataFrame:
     )
 
 
-def kafka_records_from_jsonl(
-    spark: SparkSession, path: str, streaming: bool = False,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def kafka_records_from_jsonl(spark: SparkSession, path: str) -> DataFrame:
     """JSON-lines record source — the interchange format for Kafka dumps
     (``kcat -e`` style exports, replay fixtures, cross-system handoffs):
     one JSON object per line with base64-encoded ``key_b64``/``value_b64``
@@ -87,12 +84,7 @@ def kafka_records_from_jsonl(
     inside whole-stage codegen, and the JSON parse itself is Spark's
     vectorized JSON reader.  Scale: text-file splits parallelize like any
     line format; prefer parquet fixtures when round-tripping internally
-    (base64 costs ~33% size)."""
-    if streaming:
-        reader = spark.readStream.schema(_JSONL_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return _from_jsonl_shape(reader.json(path))
+    (base64 costs ~33% size).  Batch only, like the parquet source."""
     return _from_jsonl_shape(spark.read.schema(_JSONL_SCHEMA).json(path))
 
 

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from byte_convert_avro_spark.functions import md5_long
+
 SKETCH_K = 64
 
 OUT_SCHEMA = T.StructType(
@@ -95,15 +97,7 @@ def streaming_rank_sketch(events: DataFrame, k: int = SKETCH_K) -> DataFrame:
     rows; NULL values are excluded (a NULL has no rank), mirroring the
     batch operator's filter."""
     assert k == SKETCH_K, "state schema is fixed at SKETCH_K"
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("event_id").cast("string"), F.lit(":rs"))),
-            1,
-            13,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_long(F.concat(F.col("event_id").cast("string"), F.lit(":rs")), 13)
     ev = (
         events.filter(
             F.col("value").isNotNull() & F.col("event_type").isNotNull()

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 from pyspark.sql import functions as F
@@ -37,12 +38,22 @@ def test_text_functions(spark):
         BF.punct_ratio("t").alias("p"),
         BF.uppercase_ratio("t").alias("u"),
         BF.content_hash("t").alias("h"),
+        BF.md5_long("t").alias("m8"),
+        BF.md5_long("t", 13).alias("m13"),
+        BF.md5_long("t", 4, start=5).alias("m4"),
+        BF.hash_bucket("t", 7).alias("b7"),
     ).collect()[0]
     assert r.tok == 5  # Hello , world ! Yes
     assert r.w == 3
     assert math.isclose(r.p, 2 / 17)
     assert math.isclose(r.u, 2 / 17)
     assert len(r.h) == 32
+    hexd = hashlib.md5(b"Hello, world! Yes").hexdigest()
+    digits = lambda s, n: int(hexd[s - 1 : s - 1 + n], 16)
+    assert r.m8 == digits(1, 8)
+    assert r.m13 == digits(1, 13)
+    assert r.m4 == digits(5, 4)
+    assert r.b7 == digits(1, 8) % 7
 
 
 def test_time_functions_exact_at_epoch_ns_scale(spark):
@@ -69,6 +80,7 @@ def test_all_functions_are_jvm_side(spark):
         BF.n_tokens("t"),
         BF.punct_ratio("t"),
         BF.content_hash("t"),
+        BF.md5_long("t"),
         BF.epoch_us("ts"),
     )
     plan = explain_str(out, "simple")

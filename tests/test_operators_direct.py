@@ -452,25 +452,31 @@ def test_kmeans_recovers_separated_clusters_deterministically(spark):
     assert abs(got[1][0] - hi[0]) < 1e-9 and abs(got[1][1] - hi[1]) < 1e-9
 
 
-def test_pagerank_fast_path_close_to_deterministic(spark):
-    """deterministic=False (plain SUM) must agree with the ordered-fold
-    path to float-accumulation tolerance — same algorithm, different
-    summation order only — and both must sum to ~1.0 (no rank leakage on
-    the symmetric graph)."""
+def test_pagerank_sums_to_one_and_chunked_fold_agrees(spark):
+    """Ranks sum to ~1.0 on a symmetric graph (no rank leakage; string
+    ids take the flat fold), and the two-level chunked fold
+    (``fold_chunk``, integer ids) covers the same nodes as the flat fold
+    with ranks equal up to float accumulation order."""
     from byte_convert_avro_spark.operators.graph import pagerank_fixed_rounds
 
-    e0 = spark.createDataFrame(
+    def ranks(edges, **kw):
+        out = pagerank_fixed_rounds(edges, n_rounds=3, **kw).collect()
+        return {r.v: r.rank for r in out}
+
+    s0 = spark.createDataFrame(
         [(f"a{i}", f"b{i % 3}") for i in range(12)], "src string, dst string"
     )
-    edges = e0.union(e0.selectExpr("dst AS src", "src AS dst"))
-    det = {r.v: r.rank for r in pagerank_fixed_rounds(edges, n_rounds=3).collect()}
-    fast = {
-        r.v: r.rank
-        for r in pagerank_fixed_rounds(edges, n_rounds=3, deterministic=False).collect()
-    }
-    assert det.keys() == fast.keys()
-    assert all(abs(det[v] - fast[v]) < 1e-12 for v in det)
-    assert abs(sum(det.values()) - 1.0) < 1e-9
+    flat_str = ranks(s0.union(s0.selectExpr("dst AS src", "src AS dst")))
+    assert abs(sum(flat_str.values()) - 1.0) < 1e-9
+
+    e0 = [(i, (i * 7) % 20) for i in range(20) if i != (i * 7) % 20]
+    edges = spark.createDataFrame(
+        e0 + [(d, s) for s, d in e0], "src long, dst long"
+    ).distinct()
+    flat = ranks(edges)
+    chunked = ranks(edges, fold_chunk=4)
+    assert chunked.keys() == flat.keys()
+    assert all(abs(chunked[v] - flat[v]) < 1e-12 for v in flat)
 
 
 def test_kmv_partial_merge_equals_global(spark):
@@ -1257,35 +1263,6 @@ def test_walk_to_root_depth_exceeding_bound_raises(spark):
         walk_to_root(df, max_rounds=3)
     out = {r.n: r.depth for r in walk_to_root(df, max_rounds=12).collect()}
     assert out[10] == 10 and out[0] == 0
-
-
-def test_pagerank_storage_level_identical_ranks(spark):
-    """The checkpoint StorageLevel is a memory-footprint knob, not a
-    semantic one: serialized blocks produce bit-identical ranks to the
-    deserialized default (round-8 heap-floor work)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from byte_convert_avro_spark.operators.graph import pagerank_fixed_rounds
-
-    e0 = [(i, (i * 7) % 20) for i in range(20) if i != (i * 7) % 20]
-    edges = spark.createDataFrame(
-        e0 + [(d, s) for s, d in e0], "src long, dst long"
-    ).distinct()
-    base = {r.v: r.rank for r in pagerank_fixed_rounds(edges, n_rounds=3).collect()}
-    ser = {
-        r.v: r.rank
-        for r in pagerank_fixed_rounds(
-            edges, n_rounds=3, storage=StorageLevel.MEMORY_AND_DISK
-        ).collect()
-    }
-    disk = {
-        r.v: r.rank
-        for r in pagerank_fixed_rounds(
-            edges, n_rounds=3, fold_chunk=4, storage=StorageLevel.DISK_ONLY
-        ).collect()
-    }
-    assert ser == base
-    assert set(disk) == set(base)  # chunked fold: same sums, bounded arrays
 
 
 def test_flac_header_parser_pure_python():
