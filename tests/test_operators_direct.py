@@ -452,31 +452,38 @@ def test_kmeans_recovers_separated_clusters_deterministically(spark):
     assert abs(got[1][0] - hi[0]) < 1e-9 and abs(got[1][1] - hi[1]) < 1e-9
 
 
-def test_pagerank_sums_to_one_and_chunked_fold_agrees(spark):
-    """Ranks sum to ~1.0 on a symmetric graph (no rank leakage; string
-    ids take the flat fold), and the two-level chunked fold
-    (``fold_chunk``, integer ids) covers the same nodes as the flat fold
-    with ranks equal up to float accumulation order."""
+def _pagerank_reference(edges, n_rounds=3, damping=0.85):
+    """Plain-Python PageRank with the engine's update rule: uniform 1/N
+    init, ``(1-d)/N + d * sum(rank(u)/outdeg(u))`` per round."""
+    nodes = sorted({v for e in edges for v in e})
+    outdeg = {}
+    for s, _ in edges:
+        outdeg[s] = outdeg.get(s, 0) + 1
+    n = len(nodes)
+    ranks = dict.fromkeys(nodes, 1.0 / n)
+    for _ in range(n_rounds):
+        sums = dict.fromkeys(nodes, 0.0)
+        for s, d in sorted(edges):
+            sums[d] += ranks[s] / outdeg[s]
+        ranks = {v: (1.0 - damping) / n + damping * sums[v] for v in nodes}
+    return ranks
+
+
+def test_pagerank_fast_path_close_to_deterministic(spark):
+    """The ordered source-id fold (the only fold path) agrees with a
+    plain-Python power iteration to float-accumulation tolerance on a
+    string-id graph, and the ranks sum to ~1.0 (no rank leakage on the
+    symmetric graph)."""
     from byte_convert_avro_spark.operators.graph import pagerank_fixed_rounds
 
-    def ranks(edges, **kw):
-        out = pagerank_fixed_rounds(edges, n_rounds=3, **kw).collect()
-        return {r.v: r.rank for r in out}
-
-    s0 = spark.createDataFrame(
-        [(f"a{i}", f"b{i % 3}") for i in range(12)], "src string, dst string"
-    )
-    flat_str = ranks(s0.union(s0.selectExpr("dst AS src", "src AS dst")))
-    assert abs(sum(flat_str.values()) - 1.0) < 1e-9
-
-    e0 = [(i, (i * 7) % 20) for i in range(20) if i != (i * 7) % 20]
-    edges = spark.createDataFrame(
-        e0 + [(d, s) for s, d in e0], "src long, dst long"
-    ).distinct()
-    flat = ranks(edges)
-    chunked = ranks(edges, fold_chunk=4)
-    assert chunked.keys() == flat.keys()
-    assert all(abs(chunked[v] - flat[v]) < 1e-12 for v in flat)
+    e0 = [(f"a{i}", f"b{i % 3}") for i in range(12)]
+    pairs = e0 + [(d, s) for s, d in e0]
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    det = {r.v: r.rank for r in pagerank_fixed_rounds(edges, n_rounds=3).collect()}
+    ref = _pagerank_reference(pairs)
+    assert det.keys() == ref.keys()
+    assert all(abs(det[v] - ref[v]) < 1e-12 for v in det)
+    assert abs(sum(det.values()) - 1.0) < 1e-9
 
 
 def test_kmv_partial_merge_equals_global(spark):
@@ -1263,6 +1270,31 @@ def test_walk_to_root_depth_exceeding_bound_raises(spark):
         walk_to_root(df, max_rounds=3)
     out = {r.n: r.depth for r in walk_to_root(df, max_rounds=12).collect()}
     assert out[10] == 10 and out[0] == 0
+
+
+def test_pagerank_storage_level_identical_ranks(spark):
+    """Checkpoints are always serialized MEMORY_AND_DISK blocks, a
+    memory-footprint choice, not a semantic one: reruns are bit-identical,
+    ranks match a plain-Python power iteration, and the two-level chunked
+    fold (``fold_chunk``) covers the same nodes as the flat fold with ranks
+    equal up to float accumulation order."""
+    from byte_convert_avro_spark.operators.graph import pagerank_fixed_rounds
+
+    def ranks(edges, **kw):
+        out = pagerank_fixed_rounds(edges, n_rounds=3, **kw).collect()
+        return {r.v: r.rank for r in out}
+
+    e0 = [(i, (i * 7) % 20) for i in range(20) if i != (i * 7) % 20]
+    pairs = sorted(set(e0 + [(d, s) for s, d in e0]))
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    base = ranks(edges)
+    assert ranks(edges) == base
+    ref = _pagerank_reference(pairs)
+    assert base.keys() == ref.keys()
+    assert all(abs(base[v] - ref[v]) < 1e-12 for v in base)
+    chunked = ranks(edges, fold_chunk=4)
+    assert chunked.keys() == base.keys()
+    assert all(abs(chunked[v] - base[v]) < 1e-12 for v in base)
 
 
 def test_flac_header_parser_pure_python():
